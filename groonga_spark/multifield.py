@@ -48,7 +48,7 @@ from groonga_spark.ql import (
     Term,
     parse_query,
 )
-from groonga_spark.search import FulltextIndex
+from groonga_spark.search import RESULT_SCHEMA, FulltextIndex, result_frame
 
 MANIFEST = "multifield.json"
 
@@ -174,7 +174,7 @@ class MultiFieldIndex:
     # -- evaluation ---------------------------------------------------------
 
     def _empty(self) -> DataFrame:
-        return self.spark.createDataFrame([], "doc_id long, score double")
+        return result_frame(self.spark)
 
     def _leaf(self, node, cols: list[tuple[str, float]]) -> DataFrame:
         """Weighted cross-field OR of one query leaf — the reference's
@@ -487,7 +487,7 @@ class MultiFieldIndex:
             "k": k,
         })
 
-        def _run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def _run(key, pdf):
             from groonga_spark.wand import SegmentQueryKernel, TermPostings
 
             v = info.value
@@ -523,7 +523,7 @@ class MultiFieldIndex:
             return pd.DataFrame({"doc_id": doc, "score": score})
 
         per_shard = blocks.groupBy("segment", "shard").applyInPandas(
-            _run, schema="doc_id long, score double"
+            _run, schema=RESULT_SCHEMA
         )
         return per_shard.orderBy(
             F.desc("score"), F.asc("doc_id")
@@ -578,12 +578,7 @@ class MultiFieldIndex:
                 return dist
             got = None
         if got is not None:
-            import pandas as pd
-
-            out = pd.DataFrame({"doc_id": got[0], "score": got[1]})
-            return self.spark.createDataFrame(
-                out, "doc_id long, score double"
-            )
+            return result_frame(self.spark, *got)
         return (
             self.match_docs(query, match_columns)
             .orderBy(F.desc("score"), F.asc("doc_id"))

@@ -8,27 +8,142 @@ set operation is segment-local); a global ``orderBy(score desc, doc_id
 asc).limit(k)`` merges per-segment top-k — Spark's TakeOrderedAndProject,
 touching k rows per segment, not the corpus.
 
-Scale notes: the postings scan is filtered by ``term_id IN (...)`` which
-prunes parquet row groups (postings are written term_id-sorted) / Iceberg
-partitions; only matched terms' blocks move. The per-segment kernel holds
-q terms × that segment's blocks — bounded by segment size, independent of
-corpus size.
+Scale notes: the lexicon and every postings file are written sorted by
+their key in bounded row groups (build.LEXICON_ROW_GROUP_ROWS,
+build.POSTINGS_ROW_GROUP_BYTES). Driver-side reads go through one
+per-handle ``_SortedParquet`` per directory, which reads only the row
+groups whose key statistics can hold a wanted key; the distributed scan
+pushes ``term_id IN (...)`` to parquet / Iceberg the same way. The
+per-segment kernel holds q terms × that segment's blocks — bounded by
+segment size, independent of corpus size.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from groonga_spark.build import IndexStore
 from groonga_spark.normalize import normalize_str
 from groonga_spark.ql import parse_query, query_terms
 from groonga_spark.tokenize import tokenize_str
 from groonga_spark.wand import SegmentQueryKernel
+
+
+RESULT_SCHEMA = StructType([
+    StructField("doc_id", LongType()),
+    StructField("score", DoubleType()),
+])
+
+
+def result_frame(spark: SparkSession, doc_id=(), score=()) -> DataFrame:
+    """A ``doc_id long, score double`` DataFrame from driver-side arrays.
+
+    It goes through a pyarrow Table, which Spark turns into a local
+    relation: collecting it launches no Spark job, even when it is
+    empty (an empty pandas frame or list would take the RDD path)."""
+    tbl = pa.table({
+        "doc_id": pa.array(np.asarray(doc_id, np.int64)),
+        "score": pa.array(np.asarray(score, np.float64)),
+    })
+    return spark.createDataFrame(tbl, RESULT_SCHEMA)
+
+
+class _SortedParquet:
+    """Row-group reader over one parquet directory whose files are each
+    sorted by ``key`` (the lexicon by ``term``, postings by ``term_id``).
+
+    The footers are read once, keeping each row group's min/max of
+    ``key``; a read opens only the row groups whose [min, max] can hold a
+    wanted key, projects the wanted columns, and then filters exactly. A
+    row group without key statistics (another writer) is always read, so
+    any file layout answers the same — a one-row-group file just reads
+    whole."""
+
+    def __init__(self, path: str, key: str):
+        self.key = key
+        self.files: list[tuple[str, pq.FileMetaData]] = []
+        where, lo, hi, ranged = [], [], [], []
+        for fn in sorted(os.listdir(path)):
+            if not fn.endswith(".parquet"):
+                continue
+            f = os.path.join(path, fn)
+            md = pq.read_metadata(f)
+            col = md.schema.names.index(key)
+            for rg in range(md.num_row_groups):
+                st = md.row_group(rg).column(col).statistics
+                if st is not None and st.has_min_max:
+                    ranged.append(len(where))
+                    lo.append(st.min)
+                    hi.append(st.max)
+                where.append((len(self.files), rg))
+            self.files.append((f, md))
+        self.schema = (self.files[0][1].schema.to_arrow_schema()
+                       if self.files else pa.schema([]))
+        self._where = where
+        # min/max of the row groups that have key statistics, by position
+        # in ``_where``; every other row group is always read
+        self._ranged = np.array(ranged, np.int64)
+        self._always = np.ones(len(where), bool)
+        self._always[self._ranged] = False
+        self._lo = np.array(lo, object)
+        self._hi = np.array(hi, object)
+
+    def read(self, columns: list[str] | None = None, points=(),
+             ranges=()) -> pa.Table:
+        """Rows whose key is in ``points`` or in a half-open ``[lo, hi)``
+        of ``ranges`` (``hi=None``: unbounded), in file and row order.
+        ``columns`` is the projection; the key is always included."""
+        pts = np.array(sorted(set(points)), object)
+        ranges = list(ranges)
+        if columns is not None and self.key not in columns:
+            columns = [self.key, *columns]
+        parts = []
+        if len(pts) or ranges:
+            for f, md, rgs in self._row_groups(pts, ranges):
+                with pq.ParquetFile(f, metadata=md) as pf:
+                    parts.append(pf.read_row_groups(rgs, columns=columns))
+        if not parts:
+            empty = self.schema.empty_table()
+            return empty.select(columns) if columns else empty
+        tbl = pa.concat_tables(parts)
+        k = tbl.column(self.key)
+        keep = ([pc.is_in(k, value_set=pa.array(pts.tolist(), k.type))]
+                if len(pts) else [])
+        for a, b in ranges:
+            m = pc.greater_equal(k, a)
+            keep.append(m if b is None else pc.and_(m, pc.less(k, b)))
+        return tbl.filter(functools.reduce(pc.or_, keep))
+
+    def _row_groups(self, pts: np.ndarray, ranges: list):
+        """(file, footer, row groups) that can hold a point or overlap a
+        range, plus every row group without key statistics."""
+        hit = np.zeros(len(self._lo), bool)
+        if len(pts):
+            i = np.searchsorted(pts, self._lo, side="left")
+            inside = i < len(pts)
+            hit[inside] = pts[i[inside]] <= self._hi[inside]
+        for a, b in ranges:
+            m = self._hi >= a
+            if b is not None:
+                m &= self._lo < b
+            hit |= m
+        mask = self._always.copy()
+        mask[self._ranged[hit]] = True
+        by_file: dict[int, list[int]] = {}
+        for g in np.flatnonzero(mask):
+            fi, rg = self._where[g]
+            by_file.setdefault(fi, []).append(rg)
+        return [(*self.files[fi], rgs) for fi, rgs in by_file.items()]
 
 
 def _prefix_upper_bound(prefix: str) -> str | None:
@@ -80,9 +195,12 @@ class FulltextIndex:
         self.meta = self.store.read_meta()
         self._lex_cache: dict[str, tuple[int, float] | None] = {}
         self._postings_df: DataFrame | None = None
+        self._readers: dict[str, _SortedParquet] = {}
         from collections import OrderedDict
 
-        self._result_cache: OrderedDict[tuple, pd.DataFrame] = OrderedDict()
+        self._result_cache: OrderedDict[
+            tuple, tuple[np.ndarray, np.ndarray]
+        ] = OrderedDict()
         self._generation = self._cache_generation()
 
     def _check_generation(self) -> tuple:
@@ -95,11 +213,27 @@ class FulltextIndex:
         if gen != self._generation:
             self._lex_cache.clear()
             self._postings_df = None
+            self._readers.clear()
             self._tombstones = None
             self._tombstone_est = None
             self.meta = self.store.read_meta()
             self._generation = gen
         return gen
+
+    #: sort key of each directory the driver seeks in
+    _SORT_KEYS = {"lexicon": "term", "postings": "term_id"}
+
+    def _sorted(self, name: str) -> _SortedParquet:
+        """The handle's row-group reader of ``lexicon`` or ``postings``.
+        Its footers are read once per index generation; the generation
+        is checked first, so a rewrite by another handle never meets a
+        stale footer."""
+        self._check_generation()
+        r = self._readers.get(name)
+        if r is None:
+            r = _SortedParquet(self.store.p(name), self._SORT_KEYS[name])
+            self._readers[name] = r
+        return r
 
     @property
     def postings(self) -> DataFrame:
@@ -118,23 +252,22 @@ class FulltextIndex:
     # ---------------------------------------------------------------------
 
     def _lexicon_lookup(self, tokens: list[str]) -> list[tuple[str, int, int]]:
-        """Driver-side term → (term_id, df) lookup via a direct pyarrow
-        predicate scan of the lexicon parquet — the PAT-trie seek
-        [G: lib/pat.c · grn_pat_get] without a Spark job. Parquet
-        row-group stats prune; a q-term query touches a few row groups.
-        (The prod Iceberg deployment does the same through its metadata
-        tables.) Results are memoized per index handle."""
+        """Driver-side term → (term_id, df) lookup — the PAT-trie seek
+        [G: lib/pat.c · grn_pat_get] without a Spark job. The handle's
+        lexicon reader opens only the row groups whose term range holds
+        a wanted term (the lexicon is term-sorted in
+        build.LEXICON_ROW_GROUP_ROWS-row groups), so a q-term query reads
+        at most q row groups. (The prod Iceberg deployment does the same
+        through its metadata tables.) Results are memoized per index
+        handle."""
+        lex = self._sorted("lexicon")  # first: it may drop the memo
         missing = [t for t in tokens if t not in self._lex_cache]
         if missing:
-            import pyarrow.dataset as ds
-
-            dset = ds.dataset(self.store.p("lexicon"), format="parquet")
-            tbl = dset.to_table(
-                columns=["term", "term_id", "df"],
-                filter=ds.field("term").isin(missing),
-            )
+            tbl = lex.read(["term", "term_id", "df"], points=missing)
             found = set()
-            for term, tid, df in zip(*(c.to_pylist() for c in tbl.columns)):
+            for term, tid, df in zip(
+                *(tbl.column(c).to_pylist() for c in ("term", "term_id", "df"))
+            ):
                 self._lex_cache[term] = (int(tid), float(df))
                 found.add(term)
             for t in missing:
@@ -162,28 +295,40 @@ class FulltextIndex:
     #: fetches.
     SIMILAR_MAX_TERMS = 30
 
+    #: Most terms a prefix may expand to when the caller sets no
+    #: ``limit``: each becomes a query leaf (an OR of Terms), and the
+    #: Spark branch must never collect an unbounded match set. Past it
+    #: _prefix_terms raises instead of truncating.
+    PREFIX_TERMS_MAX = 10_000
+
     def _prefix_terms(self, prefix: str, limit: int | None = None) -> list[str]:
         """Lexicon range scan for a prefix — the PAT-trie predictive
         cursor [G: lib/pat.c · GRN_CURSOR_PREFIX]. Exact: [p, succ(p))
         where succ increments the last codepoint (codepoint order ==
         UTF-8 byte order), with a startswith post-check for the
-        no-successor edge. Unbounded by default; an explicit ``limit``
-        that truncates warns. Past PREFIX_DRIVER_SCAN_MAX terms the scan
-        runs on the executors (StringStartsWith pushes to parquet /
-        Iceberg) and only MATCHED terms transfer — with a limit, only
-        limit+1 of them."""
+        no-successor edge. An explicit ``limit`` that truncates warns;
+        without one, more than PREFIX_TERMS_MAX matches raise
+        ValueError. Past PREFIX_DRIVER_SCAN_MAX terms the scan runs on
+        the executors (StringStartsWith pushes to parquet / Iceberg) and
+        only MATCHED terms transfer — at most cap+1 of them."""
+        cap = self.PREFIX_TERMS_MAX if limit is None else limit
         if self.meta.get("n_terms", 0) > self.PREFIX_DRIVER_SCAN_MAX:
-            df = self.lexicon.select("term").filter(
-                F.col("term").startswith(prefix)
+            rows = (
+                self.lexicon.select("term")
+                .filter(F.col("term").startswith(prefix))
+                .orderBy("term").limit(cap + 1).collect()
             )
-            if limit is not None:
-                rows = df.orderBy("term").limit(limit + 1).collect()
-            else:
-                rows = df.collect()
-            terms = sorted(r["term"] for r in rows)
+            terms = [r["term"] for r in rows]
         else:
             terms = self._prefix_terms_pyarrow(prefix)
-        if limit is not None and len(terms) > limit:
+        if limit is None and len(terms) > cap:
+            raise ValueError(
+                f"prefix '{prefix}*' matches more than "
+                f"{self.PREFIX_TERMS_MAX} lexicon terms "
+                "(FulltextIndex.PREFIX_TERMS_MAX); use a longer prefix "
+                "or pass an explicit limit"
+            )
+        if len(terms) > cap:
             import warnings
 
             warnings.warn(
@@ -194,14 +339,9 @@ class FulltextIndex:
         return terms
 
     def _prefix_terms_pyarrow(self, prefix: str) -> list[str]:
-        import pyarrow.dataset as ds
-
-        f = ds.field("term") >= prefix
-        ub = _prefix_upper_bound(prefix)
-        if ub is not None:
-            f = f & (ds.field("term") < ub)
-        dset = ds.dataset(self.store.p("lexicon"), format="parquet")
-        tbl = dset.to_table(columns=["term"], filter=f)
+        tbl = self._sorted("lexicon").read(
+            ["term"], ranges=[(prefix, _prefix_upper_bound(prefix))]
+        )
         return sorted(
             t for t in tbl.column("term").to_pylist() if t.startswith(prefix)
         )
@@ -241,12 +381,8 @@ class FulltextIndex:
                     f"{prefix!r} is non-contiguous (lo={lo}, hi={hi}, n={n})"
                 )
             return lo, hi, n, float(row["sum_df"])
-        import pyarrow.compute as pc
-        import pyarrow.dataset as ds
-
-        f = (ds.field("term") >= prefix) & (ds.field("term") < ub)
-        dset = ds.dataset(self.store.p("lexicon"), format="parquet")
-        tbl = dset.to_table(columns=["term_id", "df"], filter=f)
+        tbl = self._sorted("lexicon").read(["term_id", "df"],
+                                           ranges=[(prefix, ub)])
         n = tbl.num_rows
         if n == 0:
             return None
@@ -278,16 +414,8 @@ class FulltextIndex:
         q = normalize_str(term)  # normalize_str already lowercases
         pfx = q[:prefix_length] if prefix_length else ""
         if self.meta.get("n_terms", 0) <= 100_000:
-            import pyarrow.dataset as ds
-
-            f = None
-            if pfx:
-                f = ds.field("term") >= pfx
-                ub = _prefix_upper_bound(pfx)
-                if ub is not None:
-                    f = f & (ds.field("term") < ub)
-            dset = ds.dataset(self.store.p("lexicon"), format="parquet")
-            tbl = dset.to_table(columns=["term"], filter=f)
+            ub = _prefix_upper_bound(pfx) if pfx else None
+            tbl = self._sorted("lexicon").read(["term"], ranges=[(pfx, ub)])
             cands = [
                 t for t in tbl.column("term").to_pylist()
                 if abs(len(t) - len(q)) <= max_distance
@@ -331,7 +459,7 @@ class FulltextIndex:
 
         terms = self.fuzzy_terms(term, max_distance, prefix_length)
         if not terms:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return result_frame(self.spark)
         ast = Or([Term(t) for t in terms]) if len(terms) > 1 else Term(terms[0])
         return self.match_ast(ast)
 
@@ -357,7 +485,7 @@ class FulltextIndex:
 
         terms = self.prefix_rk_terms(romaji)
         if not terms:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return result_frame(self.spark)
         ast = Or([Term(t) for t in terms]) if len(terms) > 1 else Term(terms[0])
         return self.match_ast(ast)
 
@@ -641,10 +769,13 @@ class FulltextIndex:
 
     def _local_blocks(self, tids: list[int], plan: dict,
                       force: bool = False):
-        """term_id-pruned pyarrow scan of postings for the driver-local
-        path, or None when the estimated volume warrants the cluster.
-        TermRange spans prune as BETWEEN predicates (postings files are
-        term_id-sorted → row-group range pruning), never as IN lists."""
+        """The postings blocks of ``tids`` and of the plan's TermRange
+        spans, read on the driver, or None when the estimated volume
+        warrants the cluster. The handle's postings reader opens only
+        the row groups whose term_id range overlaps a wanted tid or span
+        (each postings file is term_id-sorted in
+        build.POSTINGS_ROW_GROUP_BYTES groups); spans are ranges, never
+        IN lists."""
         meta = self.meta
         bpp = (
             meta["bytes_compressed"] / meta["postings_total"]
@@ -658,22 +789,18 @@ class FulltextIndex:
         ) * bpp * 2.0
         if est > self.DRIVER_QUERY_MAX_BYTES and not force:
             return None
-        import pyarrow.dataset as ds
-
-        f = ds.field("term_id").isin(list(tids)) if tids else None
-        for lo, hi in ranges:
-            rf = (ds.field("term_id") >= lo) & (ds.field("term_id") <= hi)
-            f = rf if f is None else (f | rf)
-        dset = ds.dataset(self.store.p("postings"), format="parquet")
-        tbl = dset.to_table(filter=f)
+        tbl = self._sorted("postings").read(
+            points=[int(t) for t in tids],
+            ranges=[(int(lo), int(hi) + 1) for lo, hi in ranges],
+        )
         return tbl.to_pandas()
 
     def _postings_pred(self, plan: dict):
         """Catalyst predicate selecting the plan's postings: IN over the
         looked-up tids + BETWEEN per TermRange span — both push down to
-        the parquet scan (term_id-sorted files → row-group pruning; the
-        Iceberg deployment prunes bucket(term_id) partitions the same
-        way)."""
+        the parquet scan, which skips row groups by their term_id
+        statistics (the Iceberg deployment prunes bucket(term_id)
+        partitions the same way)."""
         tids = plan["needed_tids"]
         cond = F.col("term_id").isin([int(t) for t in tids]) if tids else None
         for lo, hi in plan.get("tid_ranges") or []:
@@ -690,18 +817,17 @@ class FulltextIndex:
         index — no per-shard splitting cost on the driver."""
         kernel = SegmentQueryKernel(pdf, plan, stats, k)
         doc, score = kernel.run(ast) if topk else kernel.eval(ast)
-        out = pd.DataFrame({"doc_id": doc, "score": score})
-        return self.spark.createDataFrame(out, "doc_id long, score double")
+        return result_frame(self.spark, doc, score)
 
     # -- query result cache -------------------------------------------------
     #
     # The reference caches whole select outputs keyed by the request and
     # clears the cache on table update [G: lib/cache.c · grn_cache_fetch /
     # grn_cache_expire]. Here: an LRU of driver-local TOP-K results (tiny
-    # pandas frames) per handle, keyed by the query plus the index
-    # generation (meta mtime + tombstone file count — two stat calls), so
-    # deletes and compaction invalidate naturally. match_docs results are
-    # unbounded and never cached.
+    # (doc_id, score) array pairs) per handle, keyed by the query plus the
+    # index generation (meta mtime + tombstone file count — two stat
+    # calls), so deletes and compaction invalidate naturally. match_docs
+    # results are unbounded and never cached.
 
     def _cache_generation(self) -> tuple:
         gen_meta = os.path.getmtime(self.store.meta_path)
@@ -715,14 +841,14 @@ class FulltextIndex:
                   if os.path.isdir(d) else 0)
         return (gen_meta, n_tomb)
 
-    def _result_cache_get(self, key: tuple) -> pd.DataFrame | None:
+    def _result_cache_get(self, key: tuple):
         got = self._result_cache.get(key)
         if got is not None:
             self._result_cache.move_to_end(key)
         return got
 
-    def _result_cache_put(self, key: tuple, pdf: pd.DataFrame) -> None:
-        self._result_cache[key] = pdf
+    def _result_cache_put(self, key: tuple, hit: tuple) -> None:
+        self._result_cache[key] = hit
         self._result_cache.move_to_end(key)
         while len(self._result_cache) > self.RESULT_CACHE_MAX:
             self._result_cache.popitem(last=False)
@@ -753,16 +879,12 @@ class FulltextIndex:
             cache_key = (query, k, exp_key, distributed, gen, scorer)
             hit = self._result_cache_get(cache_key)
             if hit is not None:
-                return self.spark.createDataFrame(
-                    hit, "doc_id long, score double"
-                )
+                return result_frame(self.spark, *hit)
         ast = self._expand_ast(parse_query(query), expansions)
         plan = self._plan(ast)
-        spark = self.spark
-        empty_schema = "doc_id long, score double"
         tids = plan["needed_tids"]
         if ast is None or not (tids or plan["tid_ranges"]):
-            return spark.createDataFrame([], empty_schema)
+            return result_frame(self.spark)
 
         if distributed is not True:
             # an explicit distributed=False override still runs on the
@@ -780,10 +902,9 @@ class FulltextIndex:
                     kernel = SegmentQueryKernel(pdf, plan,
                                                 self._stats(scorer), k)
                     doc, score = kernel.run(ast)
-                    out = pd.DataFrame({"doc_id": doc, "score": score})
                     if cache_key is not None:
-                        self._result_cache_put(cache_key, out)
-                    return spark.createDataFrame(out, empty_schema)
+                        self._result_cache_put(cache_key, (doc, score))
+                    return result_frame(self.spark, doc, score)
 
         per_shard = self._per_shard_eval(ast, plan, self._stats(scorer), k,
                                          topk=True)
@@ -802,7 +923,6 @@ class FulltextIndex:
         so the full set is never materialized on the driver nor shipped
         whole to any executor."""
         spark = self.spark
-        empty_schema = "doc_id long, score double"
         external = plan.pop("tombstones_external", False)
         bplan = spark.sparkContext.broadcast(plan)
         ast_b = spark.sparkContext.broadcast(ast)
@@ -811,14 +931,14 @@ class FulltextIndex:
         ).withColumn("shard", F.shiftright("block_id", 24))
 
         if not external:
-            def _run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+            def _run(key, pdf):
                 kernel = SegmentQueryKernel(pdf, bplan.value, stats, k)
                 doc, score = (kernel.run(ast_b.value) if topk
                               else kernel.eval(ast_b.value))
                 return pd.DataFrame({"doc_id": doc, "score": score})
 
             return blocks.groupBy("segment", "shard").applyInPandas(
-                _run, schema=empty_schema
+                _run, schema=RESULT_SCHEMA
             )
 
         # recursiveFileLookup: big deletes are adopted as whole t-<uuid>
@@ -847,8 +967,7 @@ class FulltextIndex:
             "doc_id",
         )
 
-        def _run_t(key, bpdf: pd.DataFrame,
-                   tpdf: pd.DataFrame) -> pd.DataFrame:
+        def _run_t(key, bpdf, tpdf):
             p = dict(bplan.value)
             t = (np.unique(tpdf["doc_id"].to_numpy(np.int64))
                  if len(tpdf) else None)
@@ -860,7 +979,7 @@ class FulltextIndex:
 
         return blocks.groupBy("segment", "shard").cogroup(
             assign.groupBy("segment", "shard")
-        ).applyInPandas(_run_t, schema=empty_schema)
+        ).applyInPandas(_run_t, schema=RESULT_SCHEMA)
 
     def match_docs(self, query: str,
                    distributed: bool | None = None,
@@ -877,9 +996,8 @@ class FulltextIndex:
         other composers enter here)."""
         self._check_generation()
         plan = self._plan(ast)
-        spark = self.spark
         if ast is None or not (plan["needed_tids"] or plan["tid_ranges"]):
-            return spark.createDataFrame([], "doc_id long, score double")
+            return result_frame(self.spark)
         if distributed is not True:
             if plan.get("tombstones_external") and distributed is False:
                 plan.pop("tombstones_external")

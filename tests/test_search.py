@@ -1304,6 +1304,8 @@ def test_prefix_prod_path_never_materializes_matched_rows(spark, tmp_path):
     import pyarrow.dataset as pds
     import pytest as _pytest
 
+    from groonga_spark.search import _SortedParquet
+
     rows = [(i, f"pre{i:04d} common filler{i % 7}") for i in range(400)]
     rows += [(400 + i, f"zother{i} common") for i in range(50)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
@@ -1326,6 +1328,7 @@ def test_prefix_prod_path_never_materializes_matched_rows(spark, tmp_path):
     with _pytest.MonkeyPatch.context() as mp:
         # the Spark branch must not open the lexicon with pyarrow at all
         mp.setattr(pds, "dataset", boom)
+        mp.setattr(_SortedParquet, "read", boom)
         got_range = idx2._prefix_tid_range("pre")
         assert got_range == want_range
         assert idx2._prefix_tid_range("nosuchprefix") is None
