@@ -74,7 +74,6 @@ from groonga_spark.tokenize import tokenize_batch_encoded
 
 DEFAULT_SEGMENT_SIZE = 1 << 20          # docs per segment
 DEFAULT_SHARD_SIZE = 2048               # docs per shard (fixed per index)
-SALT_TARGET = 50_000                    # retained for API compat (unused)
 
 
 # --------------------------------------------------------------------------
@@ -864,7 +863,6 @@ def build_index(
     path: str,
     mode: str | None = "delimit",
     segment_size: int | None = None,
-    salt_target: int | None = None,
     resume: bool = True,
     fail_after_segments: int | None = None,
     shard_size: int | None = None,
@@ -874,9 +872,7 @@ def build_index(
     """Build (or resume) a full index over docs(doc_id, text, ...).
 
     ``fail_after_segments`` is a test hook: raise after N segment commits
-    to exercise resume-after-kill (BASELINE.md row 6). ``salt_target`` is
-    accepted for API compatibility; skew handling is now structural
-    (doc-range shards), so it is unused.
+    to exercise resume-after-kill (BASELINE.md row 6).
 
     ``append_only=True`` promises docs only ever gain NEW doc ids above
     the last build's high-water mark (the streaming append contract) —

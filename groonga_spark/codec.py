@@ -27,8 +27,8 @@ BLOCK_SIZE = 128
 
 
 def vb_nbytes(values: np.ndarray) -> np.ndarray:
-    """Varbyte-encoded size in bytes of each value (shared by the block
-    slicer in postings.py and the PFor cost model — ONE copy)."""
+    """Varbyte-encoded size in bytes of each value (shared with the block
+    slicer in postings.py)."""
     v = np.ascontiguousarray(values, dtype=np.uint64)
     n = np.ones(len(v), np.int64)
     tmp = v >> np.uint64(7)
@@ -132,125 +132,3 @@ def _segmented_cumsum(deltas: np.ndarray, counts: np.ndarray) -> np.ndarray:
 def slice_blocks(n: int, block_size: int = BLOCK_SIZE) -> list[tuple[int, int]]:
     """[(start, end)] slices covering n postings in block_size chunks."""
     return [(i, min(i + block_size, n)) for i in range(0, n, block_size)]
-
-
-# --------------------------------------------------------------------------
-# PForDelta (patched frame-of-reference) — the alternative block codec
-# --------------------------------------------------------------------------
-#
-# Binary packing with patched exceptions, after Zukowski et al. 2006
-# (PFOR) / Lemire & Boytsov 2012 (public literature; the reference's own
-# codec family is byte-oriented varint [G: lib/ii.c · GRN_B_ENC]).
-#
-# Status: implemented + property-tested + benchmarked standalone
-# (scripts/bench_codec.py → BENCH.md), DELIBERATELY not wired as the
-# default block codec: two rounds of kernel benchmarks show decode
-# bandwidth is not a bottleneck after block-max pruning (97–99% of
-# blocks never decode; phrase worst case 0.05 s at 2M docs), and wiring
-# a second on-disk format through every decode site buys bytes, not
-# latency, today. The wiring plan if a corpus ever shows decode-bound
-# profiles: meta["codec"]="pfor", encode_partition routes the four
-# streams here, TermPostings/the pooled kernels dispatch on meta —
-# block layout and skip metadata are codec-agnostic already.
-
-def _bit_lengths(v: np.ndarray) -> np.ndarray:
-    """Bit length of each uint64 value (0 → 0). Vectorized."""
-    bl = np.zeros(len(v), np.int64)
-    tmp = v.copy()
-    while tmp.any():
-        nz = tmp > 0
-        bl[nz] += 1
-        tmp >>= np.uint64(1)
-    return bl
-
-
-def pfor_encode(values: np.ndarray) -> bytes:
-    """PForDelta-encode a uint64 array (≤ BLOCK_SIZE values per call in
-    index use, but any length works).
-
-    Layout: varbyte header [n, b, n_exc] ++ bit-packed low ``b`` bits of
-    every value (np.packbits, little bit order) ++ varbyte exception
-    stream [idx₀, high₀, idx₁, high₁, ...] patching values whose bit
-    length exceeds ``b``. ``b`` is chosen to minimize the exact total
-    byte size over the value set's distinct bit lengths."""
-    v = np.ascontiguousarray(values, dtype=np.uint64)
-    n = len(v)
-    if n == 0:
-        return vb_encode(np.array([0, 0, 0], np.uint64))
-    bl = _bit_lengths(v)
-    # exact cost per candidate width b (candidates = distinct bit
-    # lengths: any other b is dominated by the next lower candidate)
-    idx_cost = vb_nbytes(np.arange(n, dtype=np.uint64))
-    best_b, best_cost = None, None
-    for b in sorted(set(bl.tolist()) | {int(bl.max())}):
-        exc = bl > b
-        high = v[exc] >> np.uint64(b)
-        cost = (n * b + 7) // 8
-        if exc.any():
-            cost += int(idx_cost[exc].sum())
-            cost += int(vb_nbytes(high).sum())
-        if best_cost is None or cost < best_cost:
-            best_b, best_cost = b, cost
-    b = int(best_b)
-    exc = bl > b
-    n_exc = int(exc.sum())
-    header = vb_encode(np.array([n, b, n_exc], np.uint64))
-    if b:
-        mask = np.uint64((1 << b) - 1)
-        low = v & mask
-        bits = (
-            (low[:, None] >> np.arange(b, dtype=np.uint64)[None, :])
-            & np.uint64(1)
-        ).astype(np.uint8)
-        body = np.packbits(bits.reshape(-1), bitorder="little").tobytes()
-    else:
-        body = b""
-    if n_exc:
-        idx = np.flatnonzero(exc).astype(np.uint64)
-        high = v[exc] >> np.uint64(b)
-        pairs = np.empty(2 * n_exc, np.uint64)
-        pairs[0::2] = idx
-        pairs[1::2] = high
-        exc_buf = vb_encode(pairs)
-    else:
-        exc_buf = b""
-    return header + body + exc_buf
-
-
-def pfor_decode(buf: bytes) -> np.ndarray:
-    """Inverse of pfor_encode → uint64 array."""
-    raw = np.frombuffer(buf, dtype=np.uint8)
-    # parse the 3-value varbyte header byte-by-byte (tiny)
-    vals, pos = [], 0
-    for _ in range(3):
-        x, shift = 0, 0
-        while True:
-            byte = int(raw[pos])
-            pos += 1
-            x |= (byte & 0x7F) << shift
-            if not byte & 0x80:
-                break
-            shift += 7
-        vals.append(x)
-    n, b, n_exc = vals
-    if n == 0:
-        return np.empty(0, np.uint64)
-    body_bytes = (n * b + 7) // 8
-    if b:
-        bits = np.unpackbits(
-            raw[pos : pos + body_bytes], bitorder="little"
-        )[: n * b].reshape(n, b).astype(np.uint64)
-        out = (bits << np.arange(b, dtype=np.uint64)[None, :]).sum(
-            axis=1, dtype=np.uint64
-        )
-    else:
-        out = np.zeros(n, np.uint64)
-    if n_exc:
-        pairs = vb_decode(raw[pos + body_bytes :].tobytes())
-        idx = pairs[0::2].astype(np.int64)
-        high = pairs[1::2]
-        out[idx] |= high << np.uint64(b)
-    return out
-
-
-

@@ -17,21 +17,33 @@ Semantics match the reference's expansion: query ``a b`` over columns
 (title, body) means (title@a OR body@a) AND (title@b OR body@b) — a doc
 with `a` only in the title and `b` only in the body MATCHES. That forces
 leaf-level cross-field combination (an AND of per-field full-query
-results would be wrong), so the AST is evaluated here with
-algebra.combine over (doc_id, score) DataFrames; each leaf×field runs
-the segment kernel through FulltextIndex.match_ast.
+results would be wrong). Both evaluators run on the single-field
+executor, search.execute_plan:
 
-Scale notes: q leaves × F fields kernel runs, each term_id-pruned; the
-combine joins are tiny (match sets). At 10^12 docs the per-field layout
-is the win — fields prune like partitions, and a weight change recosts
-without touching postings.
+- search() of an eligible shape (single-token terms under one AND/OR,
+  optionally with NOTs) plans once across the fields (_pruned_plan) and
+  executes ONE interval-pruned BM25F kernel (_bm25f_topk) with every
+  queried field as a source — each field's term ids offset into its own
+  namespace — driver-local or per-(segment, shard), like single-field
+  search;
+- every other shape, and match_docs, evaluates the AST here with
+  algebra.combine over (doc_id, score) DataFrames; each leaf×field runs
+  the segment kernel through FulltextIndex.match_ast.
+
+Scale notes: the pruned top-k reads each field's postings of the query
+terms once; the exhaustive path makes q leaves × F fields kernel runs,
+each term_id-pruned, and its combine joins are tiny (match sets). At
+10^12 docs the per-field layout is the win — fields prune like
+partitions, and a weight change recosts without touching postings.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -48,7 +60,13 @@ from groonga_spark.ql import (
     Term,
     parse_query,
 )
-from groonga_spark.search import RESULT_SCHEMA, FulltextIndex, result_frame
+from groonga_spark.search import (
+    _FIELD_SHIFT,
+    FulltextIndex,
+    execute_plan,
+    result_frame,
+)
+from groonga_spark.wand import SegmentQueryKernel, TermPostings
 
 MANIFEST = "multifield.json"
 
@@ -227,19 +245,15 @@ class MultiFieldIndex:
             return [(f, 1.0) for f in self.manifest["fields"]]
         return parse_match_columns(match_columns)
 
-    #: synthetic tid namespace: member key = (field_idx + 1) << _FIELD_SHIFT
-    #: | field-local term_id (term_ids are dense ranks, far below 2^40)
-    _FIELD_SHIFT = 40
-
     def _pruned_plan(self, ast, cols: list[tuple[str, float]]):
-        """Shape/lexicon analysis shared by the local and distributed
-        pruned paths (driver-cheap: tokenize the leaves once, one pruned
+        """The BM25F plan of an eligible query, for execute_plan with
+        _bm25f_topk (driver-cheap: tokenize the leaves once, one pruned
         lexicon lookup per field). Returns None when the SHAPE isn't
         eligible (multi-token leaves, Prefix/Near/Similar, nested OR/AND
         mixes); "empty" when an AND leaf matches no field; else a dict:
-        mode, groups/neg_tids over the mapped-tid namespace, per-mapped-
-        tid df, per-field stats/tombstones, per-field raw-tid lists, and
-        Σdf (posting-volume estimate)."""
+        mode, groups/neg_tids and needed_tids over the field-offset tid
+        namespace (field i's ids offset by (i + 1) << _FIELD_SHIFT),
+        per-offset-tid df, per-field stats."""
         from groonga_spark.normalize import normalize_str
         from groonga_spark.tokenize import tokenize_str
 
@@ -267,13 +281,13 @@ class MultiFieldIndex:
                 return None  # multi-token leaf (ngram/phrase) → exhaustive
             texts.append(toks[0])
 
-        # Driver-mask invariant (search.FulltextIndex._plan): past
+        # Driver-mask invariant (search.execute_plan): past
         # TOMBSTONE_DRIVER_MAX rows the driver must never materialize the
-        # tombstone set. Both pruned kernels carry per-field masks inside
-        # the plan (the distributed variant broadcasts them too), so a
-        # giant pre-compaction delete makes the pruned SHAPE ineligible —
-        # callers fall back to the exhaustive per-field algebra, whose
-        # FulltextIndex path masks executor-side past the threshold.
+        # tombstone set, and the executor's cogroup masks one source
+        # only — so a giant pre-compaction delete makes the pruned SHAPE
+        # ineligible; callers fall back to the exhaustive per-field
+        # algebra, whose FulltextIndex path masks executor-side past the
+        # threshold.
         est_tombs = 0
         for name, _w in cols:
             fidx = self.field(name)
@@ -282,27 +296,17 @@ class MultiFieldIndex:
         if est_tombs > FulltextIndex.TOMBSTONE_DRIVER_MAX:
             return None
 
-        shift = 1 << self._FIELD_SHIFT
         mapped: list[dict[str, int]] = []
         df_by_tid: dict[int, float] = {}
-        raw_tids: list[list[int]] = []
         stats_by_field: dict[int, dict] = {}
-        tombs: dict[int, object] = {}
-        sum_df = 0.0
         for fi, (name, _w) in enumerate(cols):
             fidx = self.field(name)
-            fidx._check_generation()
+            off = (fi + 1) << _FIELD_SHIFT
             rows = fidx._lexicon_lookup(sorted(set(texts)))
-            tid_map = {t: (tid, df) for t, tid, df in rows}
-            mapped.append(
-                {t: (fi + 1) * shift + tid for t, (tid, _d) in tid_map.items()}
-            )
-            raw_tids.append(sorted({tid for tid, _ in tid_map.values()}))
-            for _t, (tid, df) in tid_map.items():
-                df_by_tid[(fi + 1) * shift + tid] = float(df)
-                sum_df += float(df)
+            mapped.append({t: off + tid for t, tid, _df in rows})
+            for _t, tid, df in rows:
+                df_by_tid[off + tid] = float(df)
             stats_by_field[fi] = fidx._stats()
-            tombs[fi] = fidx.tombstones()
 
         groups = []
         for tok in texts[: len(pos)]:
@@ -328,206 +332,15 @@ class MultiFieldIndex:
             "mode": mode,
             "groups": groups,
             "neg_tids": neg_tids,
+            "needed_tids": sorted(df_by_tid),
             "df_by_tid": df_by_tid,
-            "raw_tids": raw_tids,
             "stats_by_field": stats_by_field,
-            "tombs": tombs,
-            "sum_df": sum_df,
         }
 
-    def _pruned_topk(self, ast, cols: list[tuple[str, float]], k: int,
-                     pp=None):
-        """BM25F top-k through the interval pruner — ONE kernel call over
-        members drawn from every field's postings, each member carrying
-        its field's stats/weight, instead of scoring every hit of every
-        field and sorting (the round-2 shape). Group model: one or-kind
-        group per query leaf, members = (field, token) in match_columns
-        order with weight w_f — upper bounds Σ w_f·bound_f per interval,
-        so a head-term query stops after the top-k stabilizes exactly
-        like the single-field path. Bit-identical to the exhaustive
-        DataFrame algebra (member adds in cols order == the combine('or')
-        chain; group adds in child order == the combine('and') chain).
-
-        Returns (doc_ids, scores); "distributed" when the shape is
-        eligible but the posting volume is above the driver-local cap
-        (route to _pruned_topk_distributed, passing ``pp`` to avoid
-        re-planning); None when the shape isn't eligible — callers fall
-        back to the exhaustive evaluator."""
-        import numpy as np
-
-        from groonga_spark.wand import SegmentQueryKernel, TermPostings
-
-        pp = pp if pp is not None else self._pruned_plan(ast, cols)
-        if pp is None:
-            return None
-        empty = (np.empty(0, np.int64), np.empty(0, np.float64))
-        if pp == "empty":
-            return empty
-
-        shift = 1 << self._FIELD_SHIFT
-        # Aggregate driver-volume gate: _local_blocks caps each FIELD at
-        # DRIVER_QUERY_MAX_BYTES individually, so N fields could each
-        # pass while their sum loads N× the cap onto the driver. Estimate
-        # the total across all fields once (same formula as
-        # _local_blocks: Σdf × bytes-per-posting × 2) and route to the
-        # distributed path when the aggregate exceeds the cap.
-        agg_est = 0.0
-        for fi, (name, _w) in enumerate(cols):
-            fmeta = self.field(name).meta
-            bpp = (
-                fmeta["bytes_compressed"] / fmeta["postings_total"]
-                if fmeta.get("postings_total")
-                else 8.0
-            )
-            f_sum_df = sum(
-                d for t, d in pp["df_by_tid"].items()
-                if t >> self._FIELD_SHIFT == fi + 1
-            )
-            agg_est += f_sum_df * bpp * 2.0
-        if agg_est > self.field(cols[0][0]).DRIVER_QUERY_MAX_BYTES:
-            return "distributed"
-
-        by_tid: dict[int, TermPostings] = {}
-        for fi, (name, _w) in enumerate(cols):
-            tids = pp["raw_tids"][fi]
-            if not tids:
-                continue
-            fidx = self.field(name)
-            plan_f = {
-                "df_by_tid": {
-                    t - (fi + 1) * shift: d
-                    for t, d in pp["df_by_tid"].items()
-                    if t >> self._FIELD_SHIFT == fi + 1
-                },
-                "tid_ranges": [],
-                "ranges_sum_df": 0.0,
-            }
-            pdf = fidx._local_blocks(tids, plan_f)
-            if pdf is None:
-                return "distributed"  # volume warrants the cluster
-            for tid, g in pdf.groupby("term_id"):
-                mt = (fi + 1) * shift + int(tid)
-                by_tid[mt] = TermPostings(
-                    g, pp["df_by_tid"][mt], pp["tombs"][fi],
-                    pp["stats_by_field"][fi]
-                )
-
-        # drop members whose postings are absent (belt-and-braces: a
-        # lexicon hit always has postings) — preserves member order
-        groups = []
-        for g in pp["groups"]:
-            members = [(t, w) for t, w in g["members"] if t in by_tid]
-            if members:
-                groups.append({"kind": "or", "members": members,
-                               "post": None})
-            elif pp["mode"] == "and":
-                return empty
-        if not groups:
-            return empty
-        neg_tids = [t for t in pp["neg_tids"] if t in by_tid]
-
-        kern = SegmentQueryKernel.from_term_postings(
-            by_tid, pp["stats_by_field"][0], k
-        )
-        return kern._topk_interval_pruned(groups, pp["mode"], None, neg_tids)
-
-    def _pruned_topk_distributed(self, ast, cols: list[tuple[str, float]],
-                                 k: int, pp=None) -> DataFrame | None:
-        """Cluster-scale BM25F pruned top-k: union every field's
-        term_id-pruned postings (tids remapped into the field namespace),
-        group by (segment, shard) — field layouts share shard boundaries
-        (same segment_size/shard_size, same doc ids), so one shard group
-        holds EVERY field's blocks for its doc range — and run the same
-        interval-pruner kernel per shard; global top-k merge touches k
-        rows per shard (TakeOrderedAndProject). None when the field
-        layouts don't align (different shard geometry) — exhaustive
-        fallback."""
-        import pandas as pd
-
-        pp = pp if pp is not None else self._pruned_plan(ast, cols)
-        if pp is None or pp == "empty":
-            return None
-        geom = {
-            (self.field(n).meta.get("segment_size"),
-             self.field(n).meta.get("shard_size"))
-            for n, _ in cols
-        }
-        if len(geom) != 1:
-            return None  # mis-aligned shard geometry → exhaustive
-
-        shift = 1 << self._FIELD_SHIFT
-        parts = []
-        for fi, (name, _w) in enumerate(cols):
-            tids = pp["raw_tids"][fi]
-            if not tids:
-                continue
-            parts.append(
-                self.field(name).postings
-                .filter(F.col("term_id").isin([int(t) for t in tids]))
-                .withColumn(
-                    "term_id",
-                    (F.col("term_id") + F.lit((fi + 1) * shift)).cast("long"),
-                )
-            )
-        if not parts:
-            return None
-        blocks = parts[0]
-        for p in parts[1:]:
-            blocks = blocks.unionByName(p)
-        blocks = blocks.withColumn("shard", F.shiftright("block_id", 24))
-
-        info = self.spark.sparkContext.broadcast({
-            "groups": pp["groups"],
-            "mode": pp["mode"],
-            "neg_tids": pp["neg_tids"],
-            "df_by_tid": pp["df_by_tid"],
-            "stats_by_field": pp["stats_by_field"],
-            "tombs": pp["tombs"],
-            "shift_bits": self._FIELD_SHIFT,
-            "k": k,
-        })
-
-        def _run(key, pdf):
-            from groonga_spark.wand import SegmentQueryKernel, TermPostings
-
-            v = info.value
-            out_empty = pd.DataFrame({
-                "doc_id": pd.Series(dtype="int64"),
-                "score": pd.Series(dtype="float64"),
-            })
-            by_tid = {}
-            for tid, g in pdf.groupby("term_id"):
-                tid = int(tid)
-                fi = (tid >> v["shift_bits"]) - 1
-                by_tid[tid] = TermPostings(
-                    g, v["df_by_tid"][tid], v["tombs"][fi],
-                    v["stats_by_field"][fi]
-                )
-            groups = []
-            for g in v["groups"]:
-                members = [(t, w) for t, w in g["members"] if t in by_tid]
-                if members:
-                    groups.append({"kind": "or", "members": members,
-                                   "post": None})
-                elif v["mode"] == "and":
-                    return out_empty  # leaf matches no field in this shard
-            if not groups:
-                return out_empty
-            neg = [t for t in v["neg_tids"] if t in by_tid]
-            kern = SegmentQueryKernel.from_term_postings(
-                by_tid, v["stats_by_field"][0], v["k"]
-            )
-            doc, score = kern._topk_interval_pruned(
-                groups, v["mode"], None, neg
-            )
-            return pd.DataFrame({"doc_id": doc, "score": score})
-
-        per_shard = blocks.groupBy("segment", "shard").applyInPandas(
-            _run, schema=RESULT_SCHEMA
-        )
-        return per_shard.orderBy(
-            F.desc("score"), F.asc("doc_id")
-        ).limit(k)
+    def _sources(self, cols: list[tuple[str, float]]):
+        """execute_plan sources: each queried field with its tid offset."""
+        return [(self.field(name), (fi + 1) << _FIELD_SHIFT)
+                for fi, (name, _w) in enumerate(cols)]
 
     def match_docs(self, query: str,
                    match_columns: str | None = None) -> DataFrame:
@@ -562,25 +375,62 @@ class MultiFieldIndex:
                k: int = 10) -> DataFrame:
         """BM25F top-k → (doc_id, score), (score desc, doc_id asc).
 
-        Eligible shapes run the interval-pruned kernel — driver-local
-        for small posting volumes, per-(segment, shard) on the cluster
-        past the driver cap (field layouts share shard boundaries, so
-        one shard group holds every field's blocks for its doc range);
-        remaining shapes fall back to the exhaustive leaf-level algebra
-        + global sort."""
+        Eligible shapes run _bm25f_topk through search.execute_plan —
+        driver-local for small posting volumes, per-(segment, shard) on
+        the cluster past the driver cap (field layouts share shard
+        boundaries, so one shard group holds every field's blocks for
+        its doc range); remaining shapes, and fields with different
+        shard geometry on the cluster route, fall back to the exhaustive
+        leaf-level algebra + global sort."""
         ast = parse_query(query)
         cols = self._cols(match_columns)
         pp = self._pruned_plan(ast, cols)
-        got = self._pruned_topk(ast, cols, k, pp=pp) if pp is not None else None
-        if got == "distributed":
-            dist = self._pruned_topk_distributed(ast, cols, k, pp=pp)
-            if dist is not None:
-                return dist
-            got = None
-        if got is not None:
-            return result_frame(self.spark, *got)
+        if pp == "empty":
+            return self._empty()
+        if pp is not None:
+            got = execute_plan(self._sources(cols), pp,
+                               functools.partial(_bm25f_topk, k), k, None)
+            if isinstance(got, DataFrame):
+                return got
+            if got is not None:
+                return result_frame(self.spark, *got)
         return (
             self.match_docs(query, match_columns)
             .orderBy(F.desc("score"), F.asc("doc_id"))
             .limit(k)
         )
+
+
+def _bm25f_topk(k: int, blocks, plan: dict, tombs: list):
+    """BM25F top-k of a _pruned_plan over ``blocks`` (every field's
+    postings, tids in the field-offset namespace) through the interval
+    pruner — ONE kernel call over members drawn from every field, each
+    member carrying its field's stats and tombstones. Group model: one
+    or-kind group per query leaf, members = (field, token) in
+    match_columns order with weight w_f — upper bounds Σ w_f·bound_f per
+    interval, so a head-term query stops after the top-k stabilizes
+    exactly like the single-field path. Bit-identical to the exhaustive
+    DataFrame algebra (member adds in cols order == the combine('or')
+    chain; group adds in child order == the combine('and') chain)."""
+    by_tid = {}
+    for tid, g in blocks.groupby("term_id"):
+        tid = int(tid)
+        fi = (tid >> _FIELD_SHIFT) - 1
+        by_tid[tid] = TermPostings(g, plan["df_by_tid"][tid], tombs[fi],
+                                   plan["stats_by_field"][fi])
+    empty = (np.empty(0, np.int64), np.empty(0, np.float64))
+    # drop members without postings here (a shard, or a field) —
+    # preserves member order
+    groups = []
+    for g in plan["groups"]:
+        members = [(t, w) for t, w in g["members"] if t in by_tid]
+        if members:
+            groups.append({"kind": "or", "members": members, "post": None})
+        elif plan["mode"] == "and":
+            return empty  # a leaf matches no field here
+    if not groups:
+        return empty
+    neg = [t for t in plan["neg_tids"] if t in by_tid]
+    kern = SegmentQueryKernel.from_term_postings(
+        by_tid, plan["stats_by_field"][0], k)
+    return kern._topk_interval_pruned(groups, plan["mode"], None, neg)

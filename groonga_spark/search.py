@@ -582,7 +582,7 @@ class FulltextIndex:
             needed.add(s_tid)
             df_by_tid.setdefault(s_tid, s_df)
         ranges = collect_ranges(ast)
-        plan = {
+        return {
             "tokens_by_text": {
                 t: [tid.get(tok) for tok in toks]
                 for t, toks in tokens_by_text.items()
@@ -592,17 +592,6 @@ class FulltextIndex:
             "tid_ranges": sorted({(r.lo_tid, r.hi_tid) for r in ranges}),
             "ranges_sum_df": float(sum(r.sum_df for r in ranges)),
         }
-        # Small tombstone sets ride the plan as a numpy mask (cheap,
-        # broadcast once per query). Past TOMBSTONE_DRIVER_MAX the
-        # driver must never materialize the set — the plan carries a
-        # marker instead and the distributed path cogroups each shard
-        # with its range's tombstones (executor-side masking).
-        if self._tombstone_rows_estimate() <= self.TOMBSTONE_DRIVER_MAX:
-            plan["tombstones"] = self.tombstones()
-        else:
-            plan["tombstones"] = None
-            plan["tombstones_external"] = True
-        return plan
 
     # beyond this many (estimated) posting bytes, queries run distributed;
     # under it, the driver reads the pruned blocks directly (search-head
@@ -767,57 +756,17 @@ class FulltextIndex:
         self._tombstone_est = total
         return total
 
-    def _local_blocks(self, tids: list[int], plan: dict,
-                      force: bool = False):
-        """The postings blocks of ``tids`` and of the plan's TermRange
-        spans, read on the driver, or None when the estimated volume
-        warrants the cluster. The handle's postings reader opens only
-        the row groups whose term_id range overlaps a wanted tid or span
-        (each postings file is term_id-sorted in
-        build.POSTINGS_ROW_GROUP_BYTES groups); spans are ranges, never
-        IN lists."""
-        meta = self.meta
-        bpp = (
-            meta["bytes_compressed"] / meta["postings_total"]
-            if meta.get("postings_total")
-            else 8.0
-        )
-        ranges = plan.get("tid_ranges") or []
-        est = (
-            sum(plan["df_by_tid"].get(t, 0.0) for t in tids)
-            + plan.get("ranges_sum_df", 0.0)
-        ) * bpp * 2.0
-        if est > self.DRIVER_QUERY_MAX_BYTES and not force:
-            return None
-        tbl = self._sorted("postings").read(
+    def _local_blocks(self, tids: list[int], ranges) -> pd.DataFrame:
+        """The postings blocks of ``tids`` and of the inclusive term_id
+        ``ranges`` (TermRange spans), read on the driver. The handle's
+        postings reader opens only the row groups whose term_id range
+        overlaps a wanted tid or span (each postings file is
+        term_id-sorted in build.POSTINGS_ROW_GROUP_BYTES groups); spans
+        are ranges, never IN lists."""
+        return self._sorted("postings").read(
             points=[int(t) for t in tids],
             ranges=[(int(lo), int(hi) + 1) for lo, hi in ranges],
-        )
-        return tbl.to_pandas()
-
-    def _postings_pred(self, plan: dict):
-        """Catalyst predicate selecting the plan's postings: IN over the
-        looked-up tids + BETWEEN per TermRange span — both push down to
-        the parquet scan, which skips row groups by their term_id
-        statistics (the Iceberg deployment prunes bucket(term_id)
-        partitions the same way)."""
-        tids = plan["needed_tids"]
-        cond = F.col("term_id").isin([int(t) for t in tids]) if tids else None
-        for lo, hi in plan.get("tid_ranges") or []:
-            rc = F.col("term_id").between(int(lo), int(hi))
-            cond = rc if cond is None else (cond | rc)
-        return cond if cond is not None else F.lit(False)
-
-    def _run_local(self, pdf: pd.DataFrame, ast, plan: dict, stats: dict,
-                   k: int, topk: bool):
-        """Run the kernel on the driver over the whole pruned block set.
-
-        Blocks across segments/shards are globally doc-disjoint and
-        ordered by (segment, block_id), so ONE kernel evaluates the full
-        index — no per-shard splitting cost on the driver."""
-        kernel = SegmentQueryKernel(pdf, plan, stats, k)
-        doc, score = kernel.run(ast) if topk else kernel.eval(ast)
-        return result_frame(self.spark, doc, score)
+        ).to_pandas()
 
     # -- query result cache -------------------------------------------------
     #
@@ -882,104 +831,16 @@ class FulltextIndex:
                 return result_frame(self.spark, *hit)
         ast = self._expand_ast(parse_query(query), expansions)
         plan = self._plan(ast)
-        tids = plan["needed_tids"]
-        if ast is None or not (tids or plan["tid_ranges"]):
+        if ast is None or not (plan["needed_tids"] or plan["tid_ranges"]):
             return result_frame(self.spark)
-
-        if distributed is not True:
-            # an explicit distributed=False override still runs on the
-            # driver even past the tombstone cap (the caller insisted);
-            # the auto route skips the local path so the driver never
-            # holds a TOMBSTONE_DRIVER_MAX-exceeding mask
-            if plan.get("tombstones_external") and distributed is False:
-                plan.pop("tombstones_external")
-                plan["tombstones"] = self.tombstones()
-            if not plan.get("tombstones_external"):
-                pdf = self._local_blocks(
-                    tids, plan, force=(distributed is False)
-                )
-                if pdf is not None:
-                    kernel = SegmentQueryKernel(pdf, plan,
-                                                self._stats(scorer), k)
-                    doc, score = kernel.run(ast)
-                    if cache_key is not None:
-                        self._result_cache_put(cache_key, (doc, score))
-                    return result_frame(self.spark, doc, score)
-
-        per_shard = self._per_shard_eval(ast, plan, self._stats(scorer), k,
-                                         topk=True)
-        return per_shard.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-    def _per_shard_eval(self, ast, plan: dict, stats: dict, k: int,
-                        topk: bool) -> DataFrame:
-        """Fan the kernel out per (segment, shard). Shards are
-        doc-disjoint → the kernel is correct per group; parallelism =
-        live shards, not segments.
-
-        When the plan marks tombstones as external (set too big for the
-        driver), each shard group is COGROUPED with exactly its doc
-        range's tombstones: the tombstone table is range-assigned to
-        shards via a broadcast join against the O(shards) range frame,
-        so the full set is never materialized on the driver nor shipped
-        whole to any executor."""
-        spark = self.spark
-        external = plan.pop("tombstones_external", False)
-        bplan = spark.sparkContext.broadcast(plan)
-        ast_b = spark.sparkContext.broadcast(ast)
-        blocks = self.postings.filter(
-            self._postings_pred(plan)
-        ).withColumn("shard", F.shiftright("block_id", 24))
-
-        if not external:
-            def _run(key, pdf):
-                kernel = SegmentQueryKernel(pdf, bplan.value, stats, k)
-                doc, score = (kernel.run(ast_b.value) if topk
-                              else kernel.eval(ast_b.value))
-                return pd.DataFrame({"doc_id": doc, "score": score})
-
-            return blocks.groupBy("segment", "shard").applyInPandas(
-                _run, schema=RESULT_SCHEMA
-            )
-
-        # recursiveFileLookup: big deletes are adopted as whole t-<uuid>
-        # DIRECTORIES (atomic rename); Spark's listing skips the
-        # dot/underscore-prefixed staging dirs and _SUCCESS markers
-        tomb = (spark.read.option("recursiveFileLookup", "true")
-                     .parquet(self.store.p("tombstones")))
-        # fresh column names break the shared lineage with `blocks`
-        # (the cogroup below would otherwise trip Spark's ambiguous
-        # self-join analysis — both sides descend from the same scan)
-        ranges = blocks.groupBy("segment", "shard").agg(
-            F.min("min_doc_id").alias("_lo"),
-            F.max("max_doc_id").alias("_hi"),
-        ).select(
-            F.col("segment").alias("_seg"),
-            F.col("shard").alias("_shd"),
-            "_lo", "_hi",
-        )
-        assign = tomb.join(
-            F.broadcast(ranges),
-            (tomb["doc_id"] >= F.col("_lo"))
-            & (tomb["doc_id"] <= F.col("_hi")),
-        ).select(
-            F.col("_seg").alias("segment"),
-            F.col("_shd").alias("shard"),
-            "doc_id",
-        )
-
-        def _run_t(key, bpdf, tpdf):
-            p = dict(bplan.value)
-            t = (np.unique(tpdf["doc_id"].to_numpy(np.int64))
-                 if len(tpdf) else None)
-            p["tombstones"] = t if t is not None and len(t) else None
-            kernel = SegmentQueryKernel(bpdf, p, stats, k)
-            doc, score = (kernel.run(ast_b.value) if topk
-                          else kernel.eval(ast_b.value))
-            return pd.DataFrame({"doc_id": doc, "score": score})
-
-        return blocks.groupBy("segment", "shard").cogroup(
-            assign.groupBy("segment", "shard")
-        ).applyInPandas(_run_t, schema=RESULT_SCHEMA)
+        kernel = functools.partial(_segment_kernel, ast, self._stats(scorer),
+                                   k)
+        got = execute_plan([(self, 0)], plan, kernel, k, distributed)
+        if isinstance(got, DataFrame):
+            return got
+        if cache_key is not None:
+            self._result_cache_put(cache_key, got)
+        return result_frame(self.spark, *got)
 
     def match_docs(self, query: str,
                    distributed: bool | None = None,
@@ -998,17 +859,171 @@ class FulltextIndex:
         plan = self._plan(ast)
         if ast is None or not (plan["needed_tids"] or plan["tid_ranges"]):
             return result_frame(self.spark)
-        if distributed is not True:
-            if plan.get("tombstones_external") and distributed is False:
-                plan.pop("tombstones_external")
-                plan["tombstones"] = self.tombstones()
-            if not plan.get("tombstones_external"):
-                pdf = self._local_blocks(
-                    plan["needed_tids"], plan, force=(distributed is False)
-                )
-                if pdf is not None:
-                    return self._run_local(pdf, ast, plan,
-                                           self._stats(scorer),
-                                           1 << 62, topk=False)
-        return self._per_shard_eval(ast, plan, self._stats(scorer), 1 << 62,
-                                    topk=False)
+        kernel = functools.partial(_segment_kernel, ast, self._stats(scorer),
+                                   None)
+        got = execute_plan([(self, 0)], plan, kernel, None, distributed)
+        if isinstance(got, DataFrame):
+            return got
+        return result_frame(self.spark, *got)
+
+
+def _segment_kernel(ast, stats: dict, k: int | None, blocks: pd.DataFrame,
+                    plan: dict, tombs: list):
+    """One field's query as an executor kernel: the top ``k`` through the
+    segment kernel's pruned paths, or every match (``k=None``)."""
+    kern = SegmentQueryKernel(blocks, dict(plan, tombstones=tombs[0]), stats,
+                              (1 << 62) if k is None else k)
+    return kern.eval(ast) if k is None else kern.run(ast)
+
+
+#: Width of one source's term_id namespace in execute_plan: source i's
+#: term ids are shifted by its offset, a multiple of 2**_FIELD_SHIFT
+#: (dense term ids are ranks, far below 2**40).
+_FIELD_SHIFT = 40
+
+
+def _postings_pred(tids: list[int], ranges):
+    """Catalyst predicate selecting postings: IN over the looked-up tids
+    + BETWEEN per inclusive TermRange span — both push down to the
+    parquet scan, which skips row groups by their term_id statistics
+    (the Iceberg deployment prunes bucket(term_id) partitions the same
+    way)."""
+    cond = F.col("term_id").isin([int(t) for t in tids]) if tids else None
+    for lo, hi in ranges:
+        rc = F.col("term_id").between(int(lo), int(hi))
+        cond = rc if cond is None else (cond | rc)
+    return cond if cond is not None else F.lit(False)
+
+
+def execute_plan(sources: list[tuple[FulltextIndex, int]], plan: dict,
+                 kernel, k: int | None, distributed: bool | None):
+    """Route a planned query and run its kernel — the one executor of
+    single-field and multi-field search.
+
+    ``sources`` are (index, term_id offset) pairs; ``plan["needed_tids"]``
+    and ``plan.get("tid_ranges")`` name the postings to read in the
+    offset namespace (source i owns the ids whose ``>> _FIELD_SHIFT``
+    equals its offset's), ``plan["df_by_tid"]`` their df.
+    ``kernel(blocks, plan, tombs)`` maps a postings frame (term ids
+    offset) to ``(doc, score)``; ``tombs[i]`` is source i's tombstone
+    mask.
+
+    Routing:
+    - tombstones: past TOMBSTONE_DRIVER_MAX (estimated from footers) the
+      driver never materializes the set; the query runs distributed and
+      each (segment, shard) is cogrouped with its doc range's tombstones.
+      ``distributed=False`` overrides: the caller insisted on the driver.
+    - volume: Σdf × bytes-per-posting × 2 over the sources; above
+      DRIVER_QUERY_MAX_BYTES (or ``distributed=True``) the kernel fans
+      out per (segment, shard) — shards are doc-disjoint, so it is
+      correct per group — else it runs once on the driver over every
+      read block (blocks are globally doc-disjoint and ordered).
+
+    Returns the ``(doc, score)`` arrays of a driver-local run, or the
+    per-shard DataFrame of a distributed one, merged to the top ``k``
+    unless ``k`` is None; None when the sources' shard geometries differ,
+    so no (segment, shard) group holds every source's blocks for its doc
+    range (callers fall back). Past the tombstone cap a query has one
+    source (multi-field plans fall back before)."""
+    head = sources[0][0]
+    reads = []
+    for src, off in sources:
+        ns = off >> _FIELD_SHIFT
+        tids = [t - off for t in plan["needed_tids"]
+                if t >> _FIELD_SHIFT == ns]
+        ranges = [(lo - off, hi - off)
+                  for lo, hi in plan.get("tid_ranges", ())
+                  if lo >> _FIELD_SHIFT == ns]
+        if tids or ranges:
+            reads.append((src, off, tids, ranges))
+
+    external = (distributed is not False
+                and sum(s._tombstone_rows_estimate() for s, _ in sources)
+                > head.TOMBSTONE_DRIVER_MAX)
+    tombs = None if external else [s.tombstones() for s, _ in sources]
+    if distributed is None:
+        est = 0.0
+        for src, off, tids, ranges in reads:
+            meta = src.meta
+            bpp = (meta["bytes_compressed"] / meta["postings_total"]
+                   if meta.get("postings_total") else 8.0)
+            sum_df = sum(plan["df_by_tid"].get(t + off, 0.0) for t in tids)
+            if ranges:
+                sum_df += plan.get("ranges_sum_df", 0.0)
+            est += sum_df * bpp * 2.0
+        distributed = external or est > head.DRIVER_QUERY_MAX_BYTES
+    if not distributed:
+        frames = []
+        for src, off, tids, ranges in reads:
+            pdf = src._local_blocks(tids, ranges)
+            if off:
+                pdf["term_id"] += off
+            frames.append(pdf)
+        return kernel(pd.concat(frames, ignore_index=True)
+                      if len(frames) > 1 else frames[0], plan, tombs)
+
+    if len({(s.meta.get("segment_size"), s.meta.get("shard_size"))
+            for s, _ in sources}) != 1:
+        return None
+    parts = []
+    for src, off, tids, ranges in reads:
+        part = src.postings.filter(_postings_pred(tids, ranges))
+        if off:
+            part = part.withColumn(
+                "term_id", (F.col("term_id") + F.lit(off)).cast("long"))
+        parts.append(part)
+    blocks = functools.reduce(DataFrame.unionByName, parts).withColumn(
+        "shard", F.shiftright("block_id", 24))
+    spark = head.spark
+    bplan = spark.sparkContext.broadcast((plan, tombs))
+
+    def _frame(doc, score):
+        return pd.DataFrame({"doc_id": doc, "score": score})
+
+    if not external:
+        def _run(key, pdf):
+            return _frame(*kernel(pdf, *bplan.value))
+
+        per_shard = blocks.groupBy("segment", "shard").applyInPandas(
+            _run, schema=RESULT_SCHEMA)
+    else:
+        # recursiveFileLookup: big deletes are adopted as whole t-<uuid>
+        # DIRECTORIES (atomic rename); Spark's listing skips the
+        # dot/underscore-prefixed staging dirs and _SUCCESS markers
+        tomb = (spark.read.option("recursiveFileLookup", "true")
+                     .parquet(head.store.p("tombstones")))
+        # fresh column names break the shared lineage with `blocks`
+        # (the cogroup below would otherwise trip Spark's ambiguous
+        # self-join analysis — both sides descend from the same scan)
+        doc_ranges = blocks.groupBy("segment", "shard").agg(
+            F.min("min_doc_id").alias("_lo"),
+            F.max("max_doc_id").alias("_hi"),
+        ).select(
+            F.col("segment").alias("_seg"),
+            F.col("shard").alias("_shd"),
+            "_lo", "_hi",
+        )
+        # the tombstone table is range-assigned to shards via a
+        # broadcast join against the O(shards) range frame, so the full
+        # set is never materialized on the driver nor shipped whole to
+        # any executor
+        assign = tomb.join(
+            F.broadcast(doc_ranges),
+            (tomb["doc_id"] >= F.col("_lo"))
+            & (tomb["doc_id"] <= F.col("_hi")),
+        ).select(
+            F.col("_seg").alias("segment"),
+            F.col("_shd").alias("shard"),
+            "doc_id",
+        )
+
+        def _run_t(key, bpdf, tpdf):
+            t = np.unique(tpdf["doc_id"].to_numpy(np.int64))
+            return _frame(*kernel(bpdf, bplan.value[0], [t]))
+
+        per_shard = blocks.groupBy("segment", "shard").cogroup(
+            assign.groupBy("segment", "shard")
+        ).applyInPandas(_run_t, schema=RESULT_SCHEMA)
+    if k is None:
+        return per_shard
+    return per_shard.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)

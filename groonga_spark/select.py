@@ -292,19 +292,15 @@ _FUZZY_CALL = re.compile(
 )
 
 
-def _accepts_match_columns(index) -> bool:
-    """Whether ``index.match_docs`` takes a ``match_columns`` kwarg (a
-    MultiFieldIndex does; a single-field FulltextIndex has exactly one
-    match target). Signature inspection, NOT try/except — a TypeError
-    raised inside the engine must propagate, not silently re-run the
-    query without the column spec."""
-    import inspect
+def _match_kw(index, match_columns: str | None) -> dict:
+    """Keyword arguments passing ``match_columns`` to a MultiFieldIndex's
+    match calls; a single-field FulltextIndex has exactly one match
+    target and takes none."""
+    from groonga_spark.multifield import MultiFieldIndex
 
-    try:
-        sig = inspect.signature(index.match_docs)
-    except (TypeError, ValueError):
-        return False
-    return "match_columns" in sig.parameters
+    if isinstance(index, MultiFieldIndex):
+        return {"match_columns": match_columns}
+    return {}
 
 
 def _rewrite_query_calls(df, flt: str, index, id_col: str):
@@ -340,10 +336,7 @@ def _rewrite_query_calls(df, flt: str, index, id_col: str):
         flag = f"_q{len(flags)}_match"
         flags.append(flag)
         nonlocal df
-        if _accepts_match_columns(index):
-            matches = index.match_docs(q, match_columns=cols)
-        else:  # single-field index: one match target
-            matches = index.match_docs(q)
+        matches = index.match_docs(q, **_match_kw(index, cols))
         df = df.join(
             matches.select(
                 F.col("doc_id").alias(id_col), F.lit(True).alias(flag)
@@ -628,17 +621,17 @@ def select(
     if query is not None:
         if index is None:
             raise ValueError("query= requires index=")
+        from groonga_spark.multifield import MultiFieldIndex
+
         # match_columns (weighted multi-field spec) needs a MultiFieldIndex
-        if match_columns is not None:
-            if not _accepts_match_columns(index):
-                raise ValueError(
-                    "match_columns= needs a multi-field index "
-                    "(build_multifield_index); this index has a single "
-                    "match target"
-                )
-            matches = index.match_docs(query, match_columns=match_columns)
-        else:
-            matches = index.match_docs(query)
+        if match_columns is not None and not isinstance(index,
+                                                        MultiFieldIndex):
+            raise ValueError(
+                "match_columns= needs a multi-field index "
+                "(build_multifield_index); this index has a single "
+                "match target"
+            )
+        matches = index.match_docs(query, **_match_kw(index, match_columns))
         if (match_escalation_threshold is not None
                 and hasattr(index, "_prefix_terms")):
             # escalation relaxes via the lexicon prefix scan; a
@@ -650,12 +643,8 @@ def select(
                 esc = _escalate_ast(index, query,
                                     match_columns=match_columns)
                 if esc is not None:
-                    if match_columns is not None:
-                        matches = index.match_ast(
-                            esc, match_columns=match_columns
-                        )
-                    else:
-                        matches = index.match_ast(esc)
+                    matches = index.match_ast(
+                        esc, **_match_kw(index, match_columns))
         if adjuster:
             from groonga_spark.algebra import combine
 
@@ -665,16 +654,16 @@ def select(
                     # per-column adjuster element ``col @ "kw" * n`` —
                     # the boost match runs under its OWN column spec
                     adj_query, factor, adj_mc = adj
-                    if not _accepts_match_columns(index):
+                    if not isinstance(index, MultiFieldIndex):
                         raise ValueError(
                             "adjuster entry with match_columns needs a "
                             "multi-field index"
                         )
-                    boost = index.match_docs(adj_query,
-                                             match_columns=adj_mc)
                 else:
                     adj_query, factor = adj
-                    boost = index.match_docs(adj_query)
+                    adj_mc = None
+                boost = index.match_docs(adj_query,
+                                         **_match_kw(index, adj_mc))
                 boost = boost.withColumn(
                     "score", F.col("score") * F.lit(float(factor))
                 )
@@ -830,20 +819,10 @@ def _escalate_ast(index, query: str, match_columns: str | None = None):
     from groonga_spark.normalize import normalize_str
     from groonga_spark.ql import And, Not, Or, Term, parse_query
 
-    import inspect as _inspect
-
-    takes_mc = (
-        match_columns is not None
-        and "match_columns"
-        in _inspect.signature(index._prefix_terms).parameters
-    )
-
     def _expand_term(t: str):
         norm = normalize_str(t)
-        expanded = (
-            index._prefix_terms(norm, limit=8, match_columns=match_columns)
-            if takes_mc else index._prefix_terms(norm, limit=8)
-        )
+        expanded = index._prefix_terms(norm, limit=8,
+                                       **_match_kw(index, match_columns))
         if len(expanded) > 1:
             return Or([Term(x) for x in expanded])
         if expanded:

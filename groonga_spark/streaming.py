@@ -96,42 +96,8 @@ def _append_epoch(batch_df: DataFrame, epoch_id: int, corpus_path: str,
     import os
 
     spark = batch_df.sparkSession
-    _migrate_legacy_corpus(corpus_path)
     (batch_df.write.mode("overwrite")
      .parquet(os.path.join(corpus_path, f"epoch={int(epoch_id)}")))
     all_docs = spark.read.parquet(corpus_path).drop("epoch")
     append_docs(spark, all_docs, index_path, mode=mode,
                 segment_size=segment_size, shard_size=shard_size)
-
-
-def _migrate_legacy_corpus(corpus_path: str) -> None:
-    """One-time upgrade of a corpus written by the pre-epoch flat-append
-    sink: root-level part files mixed with ``epoch=N`` dirs break Spark's
-    partition discovery on the subsequent ``spark.read.parquet``. Legacy
-    files move into an ``epoch=-1`` partition (staged in a dot-prefixed
-    dir, adopted with one rename; a replayed partial migration merges).
-    Real streaming epoch ids are non-negative, so -1 never collides."""
-    import os
-
-    if not os.path.isdir(corpus_path):
-        return
-    flat = [fn for fn in os.listdir(corpus_path)
-            if fn.endswith(".parquet") and not fn.startswith((".", "_"))]
-    stage = os.path.join(corpus_path, ".legacy-epoch-migrate")
-    # resume a PARTIAL earlier migration too: a crash between staging
-    # and the rename leaves zero flat files but a populated stage dir —
-    # bailing on `not flat` alone would strand those rows invisibly
-    # (dot-dirs are skipped by every reader) forever
-    staged_leftover = os.path.isdir(stage) and os.listdir(stage)
-    if not flat and not staged_leftover:
-        return
-    os.makedirs(stage, exist_ok=True)
-    for fn in flat:
-        os.replace(os.path.join(corpus_path, fn), os.path.join(stage, fn))
-    dest = os.path.join(corpus_path, "epoch=-1")
-    if os.path.isdir(dest):  # resume of a partial earlier migration
-        for fn in os.listdir(stage):
-            os.replace(os.path.join(stage, fn), os.path.join(dest, fn))
-        os.rmdir(stage)
-    else:
-        os.replace(stage, dest)

@@ -83,7 +83,7 @@ def main() -> None:
     for name, q in QUERIES:
         ast = idx._expand_ast(parse_query(q))
         plan = idx._plan(ast)
-        pdf = idx._local_blocks(plan["needed_tids"], plan, force=True)
+        pdf = idx._local_blocks(plan["needed_tids"], plan["tid_ranges"])
         stats = idx._stats()
 
         def kernel():
@@ -134,14 +134,18 @@ def _bench_multifield(spark, corpus: str, args) -> dict:
     """BM25F pruned top-k (one interval-pruner kernel call with per-field
     stats) vs the exhaustive leaf-algebra DataFrame path (per-leaf×field
     kernel runs + combine joins + global sort — the round-2 shape)."""
+    import functools
+
     from pyspark.sql import functions as F
 
     from groonga_spark.build import index_is_current
     from groonga_spark.multifield import (
         MultiFieldIndex,
+        _bm25f_topk,
         build_multifield_index,
     )
     from groonga_spark.ql import parse_query
+    from groonga_spark.search import execute_plan
 
     mf_path = os.path.join(tempfile.gettempdir(), f"gs_wand_mf_{args.mult}")
     # stale unless the manifest exists AND every field index matches the
@@ -179,10 +183,14 @@ def _bench_multifield(spark, corpus: str, args) -> dict:
     for name, q, mc in shapes:
         cols = mf._cols(mc)
         ast = parse_query(q)
-        pruned, blk_pruned = spy_decodes(
-            lambda: mf._pruned_topk(ast, cols, args.k)
-        )
-        assert pruned is not None, name
+
+        def pruned_topk():
+            # MultiFieldIndex.search's pruned route, driver-local
+            return execute_plan(mf._sources(cols), mf._pruned_plan(ast, cols),
+                                functools.partial(_bm25f_topk, args.k),
+                                args.k, distributed=False)
+
+        pruned, blk_pruned = spy_decodes(pruned_topk)
 
         def exhaustive():
             return (
@@ -196,7 +204,7 @@ def _bench_multifield(spark, corpus: str, args) -> dict:
         assert pruned[1].tolist() == [r["score"] for r in exh], name
 
         t_pruned = min(
-            _time(lambda: mf._pruned_topk(ast, cols, args.k))
+            _time(pruned_topk)
             for _ in range(args.repeat)
         )
         t_exh = min(_time(exhaustive) for _ in range(args.repeat))

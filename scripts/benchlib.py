@@ -12,7 +12,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 #: every marked section any bench script owns — splicing one section
 #: always preserves the others (and bench_scaling's full rewrite keeps
 #: them all)
-KNOWN_MARKS = ("bench_wand", "bench_prefix", "bench_codec")
+KNOWN_MARKS = ("bench_wand", "bench_prefix")
 
 #: THE reference query set (head terms, tail terms, conjunctions,
 #: phrase, boolean algebra, prefix — the shapes [G: lib/ii.c ·

@@ -123,11 +123,17 @@ def main() -> None:
     # 8b. distributed BM25F pruned top-k (round 3): per-shard
     # FlatMapGroupsInPandas over the unioned field postings (term_id
     # IN pushed per field), global TakeOrderedAndProject merge
-    from groonga_spark.ql import parse_query
+    import functools
 
-    dmf = mf._pruned_topk_distributed(
-        parse_query("spark merge"), mf._cols("title*3||body"), 10
-    )
+    from groonga_spark.multifield import _bm25f_topk
+    from groonga_spark.ql import parse_query
+    from groonga_spark.search import execute_plan
+
+    cols = mf._cols("title*3||body")
+    dmf = execute_plan(mf._sources(cols),
+                       mf._pruned_plan(parse_query("spark merge"), cols),
+                       functools.partial(_bm25f_topk, 10), 10,
+                       distributed=True)
     if dmf is not None:
         audit("multifield_distributed_pruned", dmf,
               ["FlatMapGroupsInPandas", "TakeOrderedAndProject",

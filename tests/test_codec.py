@@ -82,38 +82,6 @@ def test_vb_single_byte_fast_path_property(vals):
     assert np.array_equal(codec.vb_decode(buf), arr)
 
 
-@given(
-    st.lists(st.integers(min_value=0, max_value=2**63 - 1), max_size=300)
-)
-@settings(max_examples=200, deadline=None)
-def test_pfor_round_trip(values):
-    """PForDelta (patched frame-of-reference) round-trips exactly for
-    any uint64 stream — the alternative block codec (kept standalone;
-    see codec.py for the wiring decision)."""
-    import numpy as np
-
-    from groonga_spark.codec import pfor_decode, pfor_encode
-
-    v = np.asarray(values, np.uint64)
-    out = pfor_decode(pfor_encode(v))
-    assert out.dtype == np.uint64
-    assert (out == v).all()
-
-
-def test_pfor_beats_varbyte_on_small_gap_blocks():
-    """On the index's dominant stream shape — a block of small doc-id
-    gaps with one absolute first value — PFor must be no larger than
-    varbyte (the exception patching absorbs the outlier)."""
-    import numpy as np
-
-    from groonga_spark.codec import pfor_encode, vb_encode
-
-    rng = np.random.default_rng(7)
-    gaps = rng.integers(1, 50, 127).astype(np.uint64)
-    block = np.concatenate([[np.uint64(1_900_000_000)], gaps])
-    assert len(pfor_encode(block)) <= len(vb_encode(block))
-
-
 def test_minhash_lsh_rejects_indivisible_bands():
     import pytest as _pytest
 

@@ -273,40 +273,6 @@ def test_stream_batch_replay_is_idempotent(spark, docs, tmp_path):
     assert _postings_rows(spark, idx) == _postings_rows(spark, path2)
 
 
-def test_legacy_flat_corpus_migrates_to_epoch_partition(spark, docs,
-                                                        tmp_path):
-    """A corpus written by the pre-epoch flat-append sink (root-level
-    part files) must migrate into an epoch=-1 partition on the next
-    batch — mixing root files with epoch=N dirs breaks Spark's
-    partition discovery."""
-    from groonga_spark.streaming import _append_epoch
-
-    corpus = str(tmp_path / "legacy_corpus")
-    idx = str(tmp_path / "legacy_idx")
-
-    old = docs.filter(F.col("doc_id") < 250)
-    new = docs.filter(F.col("doc_id") >= 250)
-    old.write.parquet(corpus)  # legacy flat layout
-    assert any(f.endswith(".parquet") for f in os.listdir(corpus))
-
-    _append_epoch(new, 0, corpus, idx, segment_size=200)
-
-    # root-level part files are gone; legacy rows live in epoch=-1
-    assert not any(f.endswith(".parquet") for f in os.listdir(corpus))
-    assert os.path.isdir(os.path.join(corpus, "epoch=-1"))
-    got = spark.read.parquet(corpus)
-    assert got.count() == docs.count()
-    assert set(got.select("epoch").distinct().toPandas()["epoch"]) == {-1, 0}
-
-    # index covers BOTH the legacy and the new rows
-    built = FulltextIndex(spark, idx)
-    assert built.meta["n_docs"] == docs.count()
-
-    path2 = str(tmp_path / "legacy_batch")
-    build_index(spark, docs, path2, mode="delimit", segment_size=200)
-    assert _postings_rows(spark, idx) == _postings_rows(spark, path2)
-
-
 def test_weighted_vector_index_with_weight(spark, tmp_path):
     """WITH_WEIGHT weighted-vector index [G: lib/ii.c · WITH_WEIGHT]:
     array<struct<value, weight>> tags index with tf = weight; the tf
@@ -359,29 +325,3 @@ def test_weighted_vector_index_with_weight(spark, tmp_path):
             "doc_id long, tags array<struct<value string, weight int>>",
         )
         build_weighted_index(spark, bad, str(tmp_path / "idx_bad"))
-
-
-def test_legacy_migration_resumes_after_crash_mid_stage(spark, docs,
-                                                        tmp_path):
-    """A crash AFTER staging all legacy files but BEFORE the epoch=-1
-    rename leaves zero flat files + a populated dot-stage dir; the next
-    batch must complete the migration instead of stranding the rows."""
-    from groonga_spark.streaming import _append_epoch
-
-    corpus = str(tmp_path / "crashmig_corpus")
-    idx = str(tmp_path / "crashmig_idx")
-    old = docs.filter(F.col("doc_id") < 250)
-    old.write.parquet(corpus)
-    # simulate the crashed first attempt: files staged, rename missing
-    stage = os.path.join(corpus, ".legacy-epoch-migrate")
-    os.makedirs(stage)
-    for fn in list(os.listdir(corpus)):
-        if fn.endswith(".parquet"):
-            os.replace(os.path.join(corpus, fn), os.path.join(stage, fn))
-    assert not any(f.endswith(".parquet") for f in os.listdir(corpus))
-
-    _append_epoch(docs.filter(F.col("doc_id") >= 250), 0, corpus, idx,
-                  segment_size=200)
-    got = spark.read.parquet(corpus)
-    assert got.count() == docs.count()
-    assert not os.path.isdir(stage)

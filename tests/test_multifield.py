@@ -7,6 +7,7 @@ from __future__ import annotations
 from collections import defaultdict
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from groonga_spark.multifield import (
@@ -187,6 +188,35 @@ def test_multifield_near_and_prefix_leaves(built, oracle, corpus):
     assert gp == wp and gp
 
 
+@pytest.fixture
+def routes(monkeypatch):
+    """The route of every MultiFieldIndex.search that reached the
+    executor: "local" (driver arrays), "cluster" (a DataFrame) or None
+    (the exhaustive fallback)."""
+    import groonga_spark.multifield as M
+
+    seen = []
+    real = M.execute_plan
+
+    def spy(*a, **kw):
+        got = real(*a, **kw)
+        seen.append("cluster" if isinstance(got, DataFrame)
+                    else None if got is None else "local")
+        return got
+
+    monkeypatch.setattr(M, "execute_plan", spy)
+    return seen
+
+
+def _rows(df):
+    return [(r["doc_id"], r["score"]) for r in df.collect()]
+
+
+def _exhaustive(mf, q, mc, k=10):
+    return _rows(mf.match_docs(q, match_columns=mc)
+                 .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
+
+
 @pytest.mark.parametrize("q,mc", [
     ("spark", "title*10||body"),
     ("spark merge", "title*10||body"),
@@ -196,35 +226,24 @@ def test_multifield_near_and_prefix_leaves(built, oracle, corpus):
     ("spark merge -slow -window", "title||body"),
     ("spark", "title"),
 ])
-def test_multifield_pruned_topk_bit_identity(q, mc, built):
+def test_multifield_pruned_topk_bit_identity(q, mc, built, routes):
     """The interval-pruned BM25F top-k must equal the exhaustive
     leaf-algebra path BIT-for-bit (same float sequences), ties and all —
     and must actually be the path search() takes for these shapes."""
-    from groonga_spark.ql import parse_query
-
-    cols = built._cols(mc)
-    got = built._pruned_topk(parse_query(q), cols, 10)
-    assert got is not None, (q, mc)  # shape must be eligible
-    exhaustive = [
-        (r["doc_id"], r["score"])
-        for r in built.match_docs(q, match_columns=mc)
-        .orderBy(F.desc("score"), F.asc("doc_id")).limit(10).collect()
-    ]
-    assert got[0].tolist() == [d for d, _ in exhaustive], (q, mc)
-    assert got[1].tolist() == [s for _, s in exhaustive], (q, mc)
+    got = _rows(built.search(q, match_columns=mc, k=10))
+    assert routes == ["local"], (q, mc)  # shape must be eligible
+    assert got == _exhaustive(built, q, mc), (q, mc)
 
 
-def test_multifield_pruned_ineligible_shapes(built):
-    """Phrases / Near / nested boolean mixes fall back (None) — and
-    search() still answers them correctly through the exhaustive path."""
-    from groonga_spark.ql import parse_query
-
+def test_multifield_pruned_ineligible_shapes(built, routes):
+    """Phrases / Near / nested boolean mixes have no pruned plan — and
+    search() still answers them through the exhaustive path."""
     cols = built._cols("title||body")
-    assert built._pruned_topk(parse_query('"spark fast"'), cols, 10) is None
-    assert built._pruned_topk(parse_query('*N3"spark merge"'), cols, 10) is None
-    assert built._pruned_topk(
-        parse_query("(spark OR merge) table"), cols, 10
-    ) is None
+    for q in ['"spark fast"', '*N3"spark merge"', "(spark OR merge) table"]:
+        assert built._pruned_plan(parse_query(q), cols) is None, q
+        got = _rows(built.search(q, match_columns="title||body", k=10))
+        assert got == _exhaustive(built, q, "title||body"), q
+    assert routes == []
 
 
 @pytest.mark.parametrize("q,mc", [
@@ -232,31 +251,26 @@ def test_multifield_pruned_ineligible_shapes(built):
     ("spark -slow", "title||body"),
     ("spark OR stream", "title*3||body"),
 ])
-def test_multifield_pruned_distributed_matches_local(q, mc, built):
+def test_multifield_pruned_distributed_matches_local(q, mc, built, routes,
+                                                      monkeypatch):
     """The cluster-scale pruned path (per-(segment, shard) kernels over
     the unioned field postings + global top-k merge) must equal the
     driver-local pruned kernel exactly — shards partition doc space, so
     per-shard scores are the global scores restricted to the range."""
-    from groonga_spark.ql import parse_query
+    from groonga_spark.search import FulltextIndex
 
-    cols = built._cols(mc)
-    ast = parse_query(q)
-    local = built._pruned_topk(ast, cols, 10)
-    assert isinstance(local, tuple)
-    dist = built._pruned_topk_distributed(ast, cols, 10)
-    assert dist is not None
-    got = [(r["doc_id"], r["score"]) for r in dist.collect()]
-    assert [d for d, _ in got] == local[0].tolist(), (q, mc)
-    assert [s for _, s in got] == local[1].tolist(), (q, mc)
+    local = _rows(built.search(q, match_columns=mc, k=10))
+    monkeypatch.setattr(FulltextIndex, "DRIVER_QUERY_MAX_BYTES", 0)
+    dist = _rows(built.search(q, match_columns=mc, k=10))
+    assert routes == ["local", "cluster"], (q, mc)
+    assert dist == local, (q, mc)
 
 
-def test_multifield_pruned_fuzz(built):
+def test_multifield_pruned_fuzz(built, routes):
     """Fuzz: random eligible shapes × random column specs — the pruned
     BM25F kernel must match the exhaustive DataFrame algebra bit-for-bit
     every time."""
     import random
-
-    from groonga_spark.ql import parse_query
 
     rng = random.Random(23)
     vocab = ["spark", "merge", "table", "scan", "stream", "window",
@@ -275,15 +289,13 @@ def test_multifield_pruned_fuzz(built):
             if rng.random() < 0.4:
                 q += f" -{rng.choice(vocab)}"
         mc = rng.choice(specs)
-        got = built._pruned_topk(parse_query(q), built._cols(mc), 10)
-        assert got is not None and not isinstance(got, str), (q, mc)
-        exh = [
-            (r["doc_id"], r["score"])
-            for r in built.match_docs(q, match_columns=mc)
-            .orderBy(F.desc("score"), F.asc("doc_id")).limit(10).collect()
-        ]
-        assert got[0].tolist() == [d for d, _ in exh], (q, mc)
-        assert got[1].tolist() == [s for _, s in exh], (q, mc)
+        pp = built._pruned_plan(parse_query(q), built._cols(mc))
+        assert pp is not None, (q, mc)
+        routes.clear()
+        got = _rows(built.search(q, match_columns=mc, k=10))
+        # an AND leaf matching no field answers empty without a read
+        assert routes == ([] if pp == "empty" else ["local"]), (q, mc)
+        assert got == _exhaustive(built, q, mc), (q, mc)
         checked += 1
     assert checked == 40
 
@@ -340,16 +352,14 @@ def test_append_multifield(spark, tmp_path):
     assert {d for d, _ in got} == set(range(160))
 
 
-def test_multifield_aggregate_driver_cap(built, monkeypatch):
+def test_multifield_aggregate_driver_cap(built, routes, monkeypatch):
     """DRIVER_QUERY_MAX_BYTES must gate the SUM of all fields' posting
     volume, not each field individually — N fields each just under the
     cap would otherwise load N× the cap onto the driver."""
-    from groonga_spark.ql import parse_query
-    from groonga_spark.search import FulltextIndex
+    from groonga_spark.search import _FIELD_SHIFT, FulltextIndex
 
     cols = built._cols("title||body")
-    ast = parse_query("spark merge")
-    pp = built._pruned_plan(ast, cols)
+    pp = built._pruned_plan(parse_query("spark merge"), cols)
     assert pp not in (None, "empty")
     per_field = []
     for fi, (name, _w) in enumerate(cols):
@@ -357,14 +367,16 @@ def test_multifield_aggregate_driver_cap(built, monkeypatch):
         bpp = (m["bytes_compressed"] / m["postings_total"]
                if m.get("postings_total") else 8.0)
         sdf = sum(d for t, d in pp["df_by_tid"].items()
-                  if t >> built._FIELD_SHIFT == fi + 1)
+                  if t >> _FIELD_SHIFT == fi + 1)
         per_field.append(sdf * bpp * 2.0)
     agg = sum(per_field)
     assert max(per_field) < agg
+    want = _rows(built.search("spark merge", "title||body", k=10))
     # a cap every field passes individually but the aggregate exceeds
     monkeypatch.setattr(FulltextIndex, "DRIVER_QUERY_MAX_BYTES",
                         (max(per_field) + agg) / 2)
-    assert built._pruned_topk(ast, cols, 10) == "distributed"
+    assert _rows(built.search("spark merge", "title||body", k=10)) == want
+    assert routes == ["local", "cluster"]
 
 
 def test_multifield_escalation_per_field(spark, built, corpus, oracle):
@@ -472,3 +484,81 @@ def test_pruned_ineligible_past_tombstone_cap(spark, tmp_path, monkeypatch):
            for r in mf2.search("spark stream", "title*2||body", k=10)
            .collect()}
     assert got == want
+
+
+def test_route_parity_single_and_multi_field(spark, built, monkeypatch):
+    """Single-field search, match_docs and MultiFieldIndex.search share
+    one executor: under the driver cap none of them launches a Spark
+    job; with the cap at 0 each runs on the cluster and returns the
+    same answer."""
+    from groonga_spark.search import FulltextIndex
+
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    body = built.field("body")
+    calls = {
+        "search": lambda: body.search("spark merge", 10, use_cache=False),
+        "match_docs": lambda: body.match_docs("spark OR slow"),
+        "multifield": lambda: built.search("spark merge", "title*10||body"),
+    }
+
+    def run():
+        out = {}
+        for name, call in calls.items():
+            j0 = dag.nextJobId()
+            out[name] = (sorted(_rows(call())), dag.nextJobId() - j0)
+        return out
+
+    local = run()
+    monkeypatch.setattr(FulltextIndex, "DRIVER_QUERY_MAX_BYTES", 0)
+    cluster = run()
+    for name in calls:
+        assert local[name][0], name
+        assert local[name][1] == 0, name
+        assert cluster[name][1] > 0, name
+        assert cluster[name][0] == local[name][0], name
+
+
+def _functions_containing(pred) -> set[str]:
+    """``file:function`` of the innermost function around every node of
+    groonga_spark/ that satisfies ``pred``."""
+    import ast as pyast
+    import os
+
+    pkg = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "groonga_spark")
+    out = set()
+
+    def walk(node, fn, func):
+        if isinstance(node, (pyast.FunctionDef, pyast.AsyncFunctionDef)):
+            func = node.name
+        if pred(node):
+            out.add(f"{fn}:{func}")
+        for child in pyast.iter_child_nodes(node):
+            walk(child, fn, func)
+
+    for fn in sorted(os.listdir(pkg)):
+        if fn.endswith(".py"):
+            with open(os.path.join(pkg, fn)) as f:
+                walk(pyast.parse(f.read()), fn, "<module>")
+    return out
+
+
+def test_one_executor_routes_every_query():
+    """The per-(segment, shard) fan-out and the driver-volume gate each
+    live in exactly one function: the executor."""
+    import ast as pyast
+
+    def shard_group(n):
+        return (isinstance(n, pyast.Call)
+                and isinstance(n.func, pyast.Attribute)
+                and n.func.attr == "groupBy"
+                and [getattr(a, "value", None) for a in n.args]
+                == ["segment", "shard"])
+
+    def volume_gate(n):
+        return isinstance(n, pyast.Compare) and any(
+            isinstance(x, pyast.Attribute)
+            and x.attr == "DRIVER_QUERY_MAX_BYTES" for x in pyast.walk(n))
+
+    assert _functions_containing(shard_group) == {"search.py:execute_plan"}
+    assert _functions_containing(volume_gate) == {"search.py:execute_plan"}

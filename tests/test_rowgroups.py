@@ -97,8 +97,7 @@ def _want_blocks(path, tids, ranges) -> pd.DataFrame:
 
 
 def _got_blocks(idx, tids, ranges) -> pd.DataFrame:
-    plan = {"df_by_tid": {}, "tid_ranges": ranges, "ranges_sum_df": 0.0}
-    return idx._local_blocks(tids, plan, force=True)
+    return idx._local_blocks(tids, ranges)
 
 
 def test_local_blocks_equal_full_file_filter(spark, idx_path):

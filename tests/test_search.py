@@ -34,7 +34,7 @@ def corpus(spark):
 def built(spark, corpus, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("idx") / "documents_idx")
     docs, _ = corpus
-    build_index(spark, docs, path, mode="delimit", segment_size=200, salt_target=300)
+    build_index(spark, docs, path, mode="delimit", segment_size=200)
     return FulltextIndex(spark, path)
 
 
@@ -141,7 +141,7 @@ def test_blockmax_pruning_identical_and_effective(spark, corpus, tmp_path):
         plan = idx._plan(idx._expand_ast(__import__("groonga_spark.ql",
                                                     fromlist=["parse_query"])
                                          .parse_query(q)))
-        pdf = idx._local_blocks(plan["needed_tids"], plan, force=True)
+        pdf = idx._local_blocks(plan["needed_tids"], plan["tid_ranges"])
         kern = SegmentQueryKernel(pdf, plan, idx._stats(), 3)
         tid = plan["needed_tids"][0]
         pruned = kern._topk_single_pruned(tid)
@@ -251,7 +251,6 @@ def test_merge_determinism_across_parallelism(spark, corpus, tmp_path):
             path,
             mode="delimit",
             segment_size=200,
-            salt_target=300,
         )
         store = IndexStore(path)
         post = (
@@ -366,7 +365,7 @@ def test_multiterm_blockmax_rank_identity(spark, tmp_path):
     for q in MULTI_QUERIES + PHRASE_NEAR_QUERIES:
         ast = idx._expand_ast(parse_query(q))
         plan = idx._plan(ast)
-        pdf = idx._local_blocks(plan["needed_tids"], plan, force=True)
+        pdf = idx._local_blocks(plan["needed_tids"], plan["tid_ranges"])
         for k in (1, 3, 10, 100):
             kern = SegmentQueryKernel(pdf, plan, idx._stats(), k)
             kern.PRUNE_MIN_BLOCKS = 0  # force the pruned path (test corpus
@@ -409,7 +408,7 @@ def test_multiterm_blockmax_actually_prunes(spark, tmp_path):
     for q in ["alpha OR beta", "alpha beta"]:
         ast = idx._expand_ast(parse_query(q))
         plan = idx._plan(ast)
-        pdf = idx._local_blocks(plan["needed_tids"], plan, force=True)
+        pdf = idx._local_blocks(plan["needed_tids"], plan["tid_ranges"])
 
         counts = {"n": 0}
         orig = TermPostings.decode_idx
@@ -700,8 +699,8 @@ def test_pruned_path_fuzz_random_queries(spark, tmp_path):
         q = rand_query()
         ast = idx._expand_ast(parse_query(q))
         plan = idx._plan(ast)
-        pdf = idx._local_blocks(plan["needed_tids"], plan, force=True)
-        if pdf is None or not (plan["needed_tids"] or plan["tid_ranges"]):
+        pdf = idx._local_blocks(plan["needed_tids"], plan["tid_ranges"])
+        if not (plan["needed_tids"] or plan["tid_ranges"]):
             continue
         k = rng.choice([1, 3, 10, 50])
         kern = SegmentQueryKernel(pdf, plan, idx._stats(), k)
@@ -755,8 +754,8 @@ def test_pruned_path_fuzz_bigram_cjk(spark, tmp_path):
         q = " ".join(parts)
         ast = idx._expand_ast(parse_query(q))
         plan = idx._plan(ast)
-        pdf = idx._local_blocks(plan["needed_tids"], plan, force=True)
-        if pdf is None or not (plan["needed_tids"] or plan["tid_ranges"]):
+        pdf = idx._local_blocks(plan["needed_tids"], plan["tid_ranges"])
+        if not (plan["needed_tids"] or plan["tid_ranges"]):
             continue
         k = rng.choice([1, 5, 20])
         kern = SegmentQueryKernel(pdf, plan, idx._stats(), k)
@@ -875,7 +874,7 @@ def test_hot_prefix_scales_without_leaves(spark, tmp_path):
     # df_by_tid is empty — per-term df rides the posting blocks
     assert plan["df_by_tid"] == {}
 
-    pdf = idx._local_blocks([], plan, force=True)
+    pdf = idx._local_blocks([], plan["tid_ranges"])
     kern = SegmentQueryKernel(pdf, plan, idx._stats(), 10)
     kern.PRUNE_MIN_BLOCKS = 0
     pruned = kern._pruned_multi(ast)
@@ -951,8 +950,8 @@ def test_prefix_range_respects_tombstones(spark, tmp_path):
     from groonga_spark.wand import SegmentQueryKernel, _topk
 
     ast = idx._expand_ast(parse_query("q0*"))
-    plan = idx._plan(ast)
-    pdf = idx._local_blocks([], plan, force=True)
+    plan = dict(idx._plan(ast), tombstones=idx.tombstones())
+    pdf = idx._local_blocks([], plan["tid_ranges"])
     kern = SegmentQueryKernel(pdf, plan, idx._stats(), 20)
     kern.PRUNE_MIN_BLOCKS = 0
     pr = kern._pruned_multi(ast)
@@ -1475,9 +1474,7 @@ def test_pruned_path_fuzz_tf_idf_scorer(spark, tmp_path):
         plan = idx._plan(ast)
         if not (plan["needed_tids"] or plan["tid_ranges"]):
             continue
-        pdf = idx._local_blocks(plan["needed_tids"], plan, force=True)
-        if pdf is None:
-            continue
+        pdf = idx._local_blocks(plan["needed_tids"], plan["tid_ranges"])
         k = rng.choice([1, 5, 20])
         kern = SegmentQueryKernel(pdf, plan, stats, k)
         kern.PRUNE_MIN_BLOCKS = 0
@@ -1644,7 +1641,7 @@ def test_similar_rides_the_pruned_kernel(spark, tmp_path):
         plan = idx._plan(ast)
         if not plan["needed_tids"]:
             continue
-        pdf = idx._local_blocks(plan["needed_tids"], plan, force=True)
+        pdf = idx._local_blocks(plan["needed_tids"], plan["tid_ranges"])
         k = rng.choice([1, 5, 20])
         kern = SegmentQueryKernel(pdf, plan, idx._stats(), k)
         kern.PRUNE_MIN_BLOCKS = 0
